@@ -14,9 +14,10 @@ Bloom bitarray stored as a binary blob row in the ``seen_filters`` table.
   bucket's blob (no rebuild).
 * **Query**: cogrouped ``applyInPandas`` (candidates ⋈ filter blob per
   bucket) → ``maybe_seen`` flag. False negatives are impossible by
-  construction; positives are confirmed by the exact anti-join on the
-  (tiny) surviving set — so the Bloom is purely a shuffle/IO reducer,
-  never a correctness risk.
+  construction; positives are confirmed by one exact anti-join that
+  carries the flag in its key (definite-new rows pass through it
+  unmatched), so the probe runs once per consuming job and the Bloom
+  is never a correctness risk.
 
 Scale: m is sized per bucket from ``expected_items`` and target FPR. For
 10^10 URLs at 1% FPR, total bits ≈ 10^10 × 9.6 ≈ 12 GB → with blobs
@@ -203,12 +204,9 @@ def bloom_anti_join_seen(
     filters: DataFrame,
     n_buckets: int = 32,
 ) -> DataFrame:
-    """Bloom-accelerated anti-join: definite-new pass through free; only
-    maybe-seen rows (true dups + FPR·new) pay the exact anti-join."""
-    flagged = bloom_flag(candidates, filters, n_buckets)
-    definite_new = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
-    maybe = flagged.filter(F.col("maybe_seen")).drop("maybe_seen")
-    from crawler_spark.operators.seen import anti_join_seen
+    """Bloom-prefiltered anti-join: one probe pass, then only maybe-seen
+    rows (true dups + FPR·new) can match in the exact confirm join."""
+    from crawler_spark.operators.seen import confirm_maybe_seen
 
-    confirmed_new = anti_join_seen(maybe, seen, n_buckets)
-    return definite_new.unionByName(confirmed_new)
+    flagged = bloom_flag(candidates, filters, n_buckets)
+    return confirm_maybe_seen(flagged, seen, n_buckets)

@@ -283,15 +283,10 @@ def cuckoo_flag(candidates, filters, n_buckets: int = 32):
 
 
 def cuckoo_anti_join_seen(candidates, seen, filters, n_buckets: int = 32):
-    """Cuckoo-accelerated anti-join, same composition as the Bloom path:
-    definite-new pass through free; maybe-seen rows (true dups + tiny
-    fingerprint-FPR share) pay the exact anti-join confirm."""
-    from pyspark.sql import functions as F
-
-    from crawler_spark.operators.seen import anti_join_seen
+    """Cuckoo-prefiltered anti-join, same composition as the Bloom path:
+    one probe pass, then only maybe-seen rows (true dups + tiny
+    fingerprint-FPR share) can match in the exact confirm join."""
+    from crawler_spark.operators.seen import confirm_maybe_seen
 
     flagged = cuckoo_flag(candidates, filters, n_buckets)
-    definite_new = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
-    maybe = flagged.filter(F.col("maybe_seen")).drop("maybe_seen")
-    confirmed_new = anti_join_seen(maybe, seen, n_buckets)
-    return definite_new.unionByName(confirmed_new)
+    return confirm_maybe_seen(flagged, seen, n_buckets)

@@ -203,7 +203,10 @@ def assign_seq(
     (distributed zipWithIndex): range-partition on the order key, rank
     within partitions, offset by per-(partition, site) cumulative counts
     computed on ~n_parts tiny rows. Bit-identical output to the Window
-    path (test-enforced), with no single-partition sort anywhere.
+    path (test-enforced), with no single-partition sort anywhere. It
+    runs two small jobs here (bounds, counts) and the rank in the
+    caller's action; each reads ``new_links`` once, so pass a
+    materialized frame (the wave loop passes a local checkpoint).
     """
     if not distributed:
         w = Window.partitionBy("site_id").orderBy("parent_seq", "link_idx")
@@ -221,13 +224,16 @@ def assign_seq(
     # boundaries must be identical across the counts job and the rank
     # job, and across resume re-runs). parent_seq within a wave spans the
     # batch's seq range roughly uniformly, so the buckets stay balanced.
-    bounds = F.broadcast(
-        new_links.groupBy("site_id").agg(
-            F.min("parent_seq").alias("_lo"), F.max("parent_seq").alias("_hi")
-        )
+    # The per-site bounds are collected once (one row per site) rather
+    # than kept as a lazy broadcast, which would re-evaluate the input
+    # inside every later job that reads ``ranged``.
+    spark = new_links.sparkSession
+    bounds = new_links.groupBy("site_id").agg(
+        F.min("parent_seq").alias("_lo"), F.max("parent_seq").alias("_hi")
     )
+    bounds_df = F.broadcast(spark.createDataFrame(bounds.collect(), bounds.schema))
     ranged = (
-        new_links.join(bounds, "site_id", "left")
+        new_links.join(bounds_df, "site_id", "left")
         .withColumn(
             "_pid",
             F.least(
@@ -240,11 +246,13 @@ def assign_seq(
             ).cast("int"),
         )
         .drop("_lo", "_hi")
+        .repartition(n_parts, F.col("_pid"))
     )
-    ranged = ranged.repartition(n_parts, F.col("_pid")).persist()
-    # per-(bucket, site) counts → driver-side cumulative offsets
-    counts = (
-        ranged.groupBy("_pid", "site_id").count().orderBy("site_id", "_pid").collect()
+    # per-(bucket, site) counts → driver-side cumulative offsets. The
+    # ≤ n_parts × sites rows are sorted here: an orderBy would add a
+    # range-sampling job that evaluates the input once more.
+    counts = sorted(
+        ranged.groupBy("_pid", "site_id").count().collect(), key=lambda r: r["_pid"]
     )
     offsets: dict[tuple[int, str], int] = {}
     running: dict[str, int] = {}
@@ -252,7 +260,6 @@ def assign_seq(
         site = r["site_id"]
         offsets[(r["_pid"], site)] = running.get(site, 0)
         running[site] = running.get(site, 0) + r["count"]
-    spark = new_links.sparkSession
     off_df = F.broadcast(
         spark.createDataFrame(
             [(pid, site, off) for (pid, site), off in offsets.items()],

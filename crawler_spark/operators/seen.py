@@ -11,8 +11,9 @@ The reference's seen set is an in-memory ``set[str]`` per site
   repartitions both sides identically so the join is shuffle-local).
 * **bloom** (see :mod:`crawler_spark.operators.bloom`): a per-bucket
   Bloom-filter blob prefilters candidates cheaply; Bloom "maybe-seen"
-  positives are confirmed by the exact anti-join on the (much smaller)
-  surviving set. Zero false negatives by construction.
+  positives are confirmed by one exact anti-join that carries the flag
+  in its key (:func:`confirm_maybe_seen`). Zero false negatives by
+  construction.
 """
 
 from __future__ import annotations
@@ -51,6 +52,26 @@ def anti_join_seen(
         n_buckets, F.col("url_hash")
     )
     return left.join(right, ["site_id", "url_hash"], "left_anti")
+
+
+def confirm_maybe_seen(
+    flagged: DataFrame, seen: DataFrame, n_buckets: int = DEFAULT_BUCKETS
+) -> DataFrame:
+    """Exact confirm of a prefilter's ``maybe_seen`` flags (Bloom or
+    cuckoo) in ONE anti-join: ``maybe_seen`` is part of the join key and
+    every ``seen`` row carries ``True``, so definite-new rows can never
+    match and pass through, while maybe-seen rows are anti-joined
+    exactly. ``flagged`` is read once; splitting it into a definite-new
+    and a maybe-seen branch made every consuming job run the prefilter
+    probe once per branch. Same co-partitioning as :func:`anti_join_seen`.
+    """
+    left = flagged.repartition(n_buckets, F.col("url_hash"))
+    right = seen.select(
+        "site_id", "url_hash", F.lit(True).alias("maybe_seen")
+    ).repartition(n_buckets, F.col("url_hash"))
+    return left.join(right, ["site_id", "url_hash", "maybe_seen"], "left_anti").drop(
+        "maybe_seen"
+    )
 
 
 def dedup_in_wave(links: DataFrame) -> DataFrame:

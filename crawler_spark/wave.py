@@ -16,7 +16,11 @@ Resume-from-checkpoint: every wave's outputs are committed through
 :class:`crawler_spark.tableio.TableCatalog`; a killed run restarts at
 ``committed_wave + 1`` and produces bit-identical state (test-verified).
 The per-wave materialization doubles as lineage truncation, so the
-iterative loop's plans stay flat.
+iterative loop's plans stay flat. Inside a wave, each phase's output is
+an eager local checkpoint (:class:`_WaveCheckpoints`): the phase runs
+once, later plans start from a leaf, and a lost executor fails the wave
+(resume reruns it) instead of silently recomputing — or re-fetching —
+part of it.
 """
 
 from __future__ import annotations
@@ -94,7 +98,6 @@ def frontier_hot() -> Column:
 
 
 _PROFILE = os.environ.get("SPARK_GRAFT_PROFILE", "0") != "0"
-_PROFILE_DEEP = os.environ.get("SPARK_GRAFT_PROFILE") == "2"
 
 # Serializes run_wave's session-scoped AQE save/toggle/restore across
 # engines sharing one SparkSession (see run_wave docstring).
@@ -113,6 +116,37 @@ class _T:
     def __exit__(self, *a):
         if _PROFILE:
             print(f"    [{self.label}] {time.time() - self.t0:.2f}s", flush=True)
+
+
+class _WaveCheckpoints:
+    """A wave's plan boundaries: eager local checkpoints of each phase's
+    output, released together when the wave returns.
+
+    A checkpointed frame is a leaf: the phase runs exactly once, inside
+    the checkpoint's own action, and later plans are analysed against
+    the leaf instead of the lineage back to the frontier-log scan.
+    ``eager=True`` matters: a lazy checkpoint runs its tasks after its
+    SQL execution has ended, when the accumulators are gone, and the
+    phase's operator metrics (extract UDF, Bloom probe) are lost.
+    ``DataFrame.unpersist()`` does not free a checkpoint's blocks, so
+    :meth:`release` unpersists the backing RDDs."""
+
+    def __init__(self, spark: SparkSession):
+        self._sc = spark.sparkContext._jsc.sc()
+        self._rdd_ids: list[int] = []
+
+    def take(self, label: str, df: DataFrame) -> DataFrame:
+        with _T(label):
+            cp = df.localCheckpoint(eager=True)
+        self._rdd_ids.append(cp._jdf.queryExecution().logical().rdd().id())
+        return cp
+
+    def release(self) -> None:
+        # SparkContext.unpersistRDD frees the same blocks as
+        # RDD.unpersist without its per-RDD "cannot be recomputed" warning
+        for rdd_id in self._rdd_ids:
+            self._sc.unpersistRDD(rdd_id, False)
+        self._rdd_ids.clear()
 
 
 @dataclass
@@ -384,7 +418,7 @@ class CrawlEngine:
             cat.register(name, mode)
         self.cat = cat
 
-    def _attachment_blocks(self, changed):
+    def _attachment_blocks(self, changed, ckpt):
         """S3/E9/S7: classify each changed page's extracted links into
         attachment candidates, fetch their payloads (real http or the
         simulated table), parse to the reference's text blocks, and
@@ -441,18 +475,13 @@ class CrawlEngine:
                 "attachment_url",
                 "left",
             ).select(F.col("attachment_url").alias("url"), "payload")
-        payloads = payloads.persist()
-
-        # persisted AND materialized: blocks (→ crawled stage job) and
-        # failures (→ failed_attachments stage job) both read `parsed`,
-        # and the two stage jobs run concurrently — a lazy persist alone
-        # would let racing tasks on DIFFERENT executors each compute the
-        # unfilled partitions, fetching and parsing every attachment
-        # twice per wave. The count() fills both caches (computing
-        # `parsed` reads — and therefore caches — `payloads`) before the
-        # concurrent consumers are submitted.
-        parsed = parse_attachments(payloads).persist()
-        parsed.count()
+        # Materialized before the consumers exist: blocks (→ crawled
+        # stage job) and failures (→ failed_attachments stage job) both
+        # read `parsed`, and the two stage jobs run concurrently — a lazy
+        # cache would let racing tasks each compute the unfilled
+        # partitions, fetching and parsing every attachment twice.
+        payloads = ckpt.take("attachments.fetch", payloads)
+        parsed = ckpt.take("attachments.parse", parse_attachments(payloads))
         blocks = (
             att.join(
                 parsed.withColumnRenamed("url", "attachment_url"), "attachment_url"
@@ -475,7 +504,7 @@ class CrawlEngine:
             payloads.join(parsed.filter(~F.col("ok")).select("url"), "url", "left_semi")
             .select("url", F.lit("fetch_or_parse_failed").alias("reason"), "payload")
         )
-        return blocks, failures, [payloads, parsed]
+        return blocks, failures
 
     def _filter_ops(self):
         """(build, update, anti_join) for the configured seen prefilter."""
@@ -887,12 +916,14 @@ class CrawlEngine:
                 "spark.sql.adaptive.enabled",
                 "true" if self.config.adaptive_in_wave else "false",
             )
+            ckpt = _WaveCheckpoints(self.spark)
             try:
-                return self._run_wave_impl()
+                return self._run_wave_impl(ckpt)
             finally:
+                ckpt.release()
                 conf.set("spark.sql.adaptive.enabled", prev)
 
-    def _run_wave_impl(self) -> dict:
+    def _run_wave_impl(self, ckpt: _WaveCheckpoints) -> dict:
         w = self.cat.committed_wave + 1
         cfg = self.config
         cat = self.cat
@@ -972,10 +1003,21 @@ class CrawlEngine:
             # gated rows a wave consumes (select_wave_batch_fifo)
             other_terminal = gated.withColumn("state", F.lit("gated_kb"))
 
-        batch = batch.drop("kb_gated").persist()
+        # The wave's consumed rows in ONE frame: the batch (still
+        # 'pending') and the gated/blocked rows (already terminal). The
+        # selection prefix runs once, here; the outcome union below reads
+        # the checkpoint instead of re-scanning the frontier log and
+        # re-broadcasting the KB and robots tables.
+        consumed = ckpt.take(
+            "select",
+            batch.select(*FRONTIER_COLS).unionByName(
+                other_terminal.select(*FRONTIER_COLS)
+            ),
+        )
+        batch = consumed.filter(F.col("state") == "pending")
+        other_terminal = consumed.filter(F.col("state") != "pending")
         with _T("batch.count"):
-            # one action: materializes the batch into the block cache AND
-            # yields the ledger-probe bucket list for the change check
+            # the ledger-probe bucket list for the change check
             n_batch, batch_buckets = self._count_and_buckets(batch, cfg.n_buckets)
         if n_batch == 0:
             # everything pending was gated: consume it and commit the wave
@@ -983,27 +1025,27 @@ class CrawlEngine:
             return {"wave": w, "done": False, "fetched": 0, "batch": 0}
 
         # --- fetch ---------------------------------------------------------
-        fetch_cache = None
         if cfg.fetch_mode == "http":
             # Production network fetch: mapInPandas over the batch, hash-
             # partitioned on url_hash so requests spread across executors;
-            # per-task thread pool + per-host caps inside (fetch.py).
+            # per-task thread pool + per-host caps inside (fetch.py). The
+            # checkpoint pins the fetched bytes: each page is GET once,
+            # here, and no later job (WARC export, extract) can re-GET.
             from crawler_spark.operators.fetch import http_fetch
 
-            fetched = http_fetch(
-                batch.repartition(cfg.n_buckets, F.col("url_hash")),
-                **(cfg.http_opts or {}),
+            fetched = ckpt.take(
+                "fetch",
+                http_fetch(
+                    batch.repartition(cfg.n_buckets, F.col("url_hash")),
+                    **(cfg.http_opts or {}),
+                ),
             )
             if cfg.warc_out:
-                # Archive the wave's fetched pages (S4's raw-bytes twin).
-                # The persist is what makes this free: the export action
-                # fills the cache (each page is GET once, here) and the
-                # extract stage below reads the cached bytes. warc_ts is
-                # the export action's timestamp — wave-granular, truthful
-                # for a live fetch (the GETs run inside this very job).
+                # Archive the wave's fetched pages (S4's raw-bytes twin)
+                # from the pinned bytes. warc_ts is the export action's
+                # timestamp — wave-granular, truthful for a live fetch.
                 from crawler_spark.sources.warc import export_warc
 
-                fetched = fetch_cache = fetched.persist()
                 # n_files=None: reuse the fetch's n_buckets hash
                 # partitioning — an explicit n_files would re-shuffle
                 # the page bytes; empty partitions produce no file
@@ -1056,41 +1098,44 @@ class CrawlEngine:
                 ex_udf("_html", "canonical_url", "base_netloc"),
             ),
         ).drop("_html")
-        ex = ex.persist()
 
         # --- ledger change check (F8) + single-pass outcome states ----------
         # The batch probes only its own url_hash buckets of the ledger —
         # bucket-pruned read, so the lookup cost tracks the batch size,
         # not the total number of pages ever processed. The fetch-outcome
         # classification (failed / fetched_empty / unchanged / fetched) is
-        # ONE when-chain over ONE ledger-joined scan of the extract cache:
-        # the previous one-frame-per-state formulation made every job that
-        # consumed the outcome union (frontier delta write, site_stats
-        # aggregates) re-scan the extract cache once per state and re-run
-        # the ledger join for the unchanged branch.
+        # ONE when-chain over ONE ledger-joined scan, and the classified
+        # frame is the extract phase's checkpoint: fetch join, extract
+        # UDF and ledger probe run once, and both the changed rows and
+        # the outcome union read the leaf.
         led = resolve_ledger(
             cat.read_buckets("ledger", batch_buckets, schemas.LEDGER_LOG)
         ).select("url_hash", F.col("content_hash").alias("_old_hash"))
         nonempty_cond = F.col("ex.title").isNotNull() & (
             F.length(F.col("ex.text")) > 0
         )
-        checked = ex.withColumn(
-            "content_hash", F.when(nonempty_cond, content_hash(F.col("ex.text")))
-        ).join(led, "url_hash", "left").withColumn(
-            "_state",
-            F.when(
-                F.col("ex").isNull() | F.col("ex.title").isNull(), F.lit("failed")
+        checked = ckpt.take(
+            "extract",
+            ex.withColumn(
+                "content_hash", F.when(nonempty_cond, content_hash(F.col("ex.text")))
             )
-            .when(
-                F.length(F.coalesce(F.col("ex.text"), F.lit(""))) == 0,
-                F.lit("fetched_empty"),
-            )
-            .when(F.col("content_hash") == F.col("_old_hash"), F.lit("unchanged"))
-            .otherwise(F.lit("fetched")),
+            .join(led, "url_hash", "left")
+            .withColumn(
+                "_state",
+                F.when(
+                    F.col("ex").isNull() | F.col("ex.title").isNull(), F.lit("failed")
+                )
+                .when(
+                    F.length(F.coalesce(F.col("ex.text"), F.lit(""))) == 0,
+                    F.lit("fetched_empty"),
+                )
+                .when(F.col("content_hash") == F.col("_old_hash"), F.lit("unchanged"))
+                .otherwise(F.lit("fetched")),
+            ),
         )
         changed = checked.filter(F.col("_state") == "fetched").drop(
             "_state", "_old_hash"
-        ).persist()
+        )
 
         # --- attachment stage (S3/E9/S7, optional) ---------------------------
         # Runs BEFORE crawled assembly so attachment text blocks append to
@@ -1098,11 +1143,10 @@ class CrawlEngine:
         # them. content_hash stays page-text-only: the ledger's
         # changed-detection contract (F8) is about the PAGE's content.
         att_failures = None
-        att_payloads = None
         text_col = F.col("ex.text")
         crawl_src = changed  # link expansion below stays on the bare page rows
         if cfg.attachments != "off":
-            att_blocks, att_failures, att_payloads = self._attachment_blocks(changed)
+            att_blocks, att_failures = self._attachment_blocks(changed, ckpt)
             crawl_src = changed.join(att_blocks, "url_hash", "left")
             text_col = F.concat(F.col("ex.text"), F.coalesce("att_text", F.lit("")))
 
@@ -1153,14 +1197,11 @@ class CrawlEngine:
             .withColumn("url_hash", F.xxhash64("canonical_url"))
             .withColumn("host", F.lower(F.parse_url("canonical_url", F.lit("HOST"))))
         )
-        deduped = dedup_in_wave(valid).persist()
+        deduped = ckpt.take("expand", dedup_in_wave(valid))
         # Read only the seen buckets the candidates can possibly match
         # (same-bucket-iff-same-hash) — the anti-join's right side scales
         # with the wave's candidate spread, not the full seen set.
         with _T("deduped.buckets"):
-            # first action on the fetch→extract→explode pipeline: this is
-            # where the wave's CPU-heavy work actually executes (the
-            # extract UDF), not a bucket bookkeeping job
             cand_buckets = self._buckets_of(deduped, cfg.n_buckets)
         seen_sub = cat.read_buckets("seen", cand_buckets, schemas.SEEN)
         if cfg.use_bloom:
@@ -1175,18 +1216,17 @@ class CrawlEngine:
             fresh = filter_anti_join(deduped, seen_sub, filters, cfg.n_buckets)
         else:
             fresh = anti_join_seen(deduped, seen_sub, cfg.n_buckets)
+        fresh = ckpt.take("admit", fresh)  # assign_seq reads it three times
 
         # per-site seq high-water mark carried in site_stats — no
         # full-frontier aggregate per wave
         max_seq = stats.select("site_id", F.col("max_seq").alias("_max_seq"))
         with _T("assign_seq"):
-            # distributed=True runs its per-bucket counts collect here —
-            # the first action over the seen anti-join (bloom probe +
-            # bucket-pruned exact join), so that cost lands in this timer
+            # distributed=True runs its bounds and counts collects here
             seq_rows = assign_seq(
                 fresh, max_seq, distributed=cfg.distributed_seq, n_parts=cfg.n_buckets
             )
-        new_rows = seq_rows.select(
+        seq_rows = seq_rows.select(
             "url",
             "canonical_url",
             "url_hash",
@@ -1201,19 +1241,7 @@ class CrawlEngine:
             "seq",
             F.lit(None).cast("int").alias("processed_wave"),
         ).select(*FRONTIER_COLS)
-
-        new_rows = new_rows.persist()
-        if _PROFILE_DEEP:
-            with _T("deep.ex.count"):
-                ex.count()
-            with _T("deep.changed.count"):
-                changed.count()
-            with _T("deep.valid.count"):
-                valid.count()
-            with _T("deep.deduped.count"):
-                deduped.count()
-            with _T("deep.fresh.count"):
-                fresh.count()
+        new_rows = ckpt.take("sequence", seq_rows)
         # --- frontier / seen / stats updates ---------------------------------
         outcome = (
             checked.withColumn("state", F.col("_state"))
@@ -1231,22 +1259,17 @@ class CrawlEngine:
         # write tasks and tiny files PER WAVE that every later frontier
         # read re-unions; coalesce (no shuffle) bounds the delta to
         # n_buckets tasks/files while keeping the write parallel
-        frontier_delta = (
+        frontier_delta = ckpt.take(
+            "delta",
             outcome.select(*FRONTIER_COLS)
             .unionByName(new_rows)
-            .coalesce(cfg.n_buckets)
-            .persist()
+            .coalesce(cfg.n_buckets),
         )
         with _T("delta.states"):
-            # ONE materializing action for everything downstream: fills
-            # the frontier_delta cache (so the stage writes and stats
-            # aggregates below all read cached slim rows instead of each
-            # recomputing the outcome branches — and, through the union,
-            # fills the new_rows cache that the seen delta reads), and
-            # its ≤ 7×n_buckets result rows give the wave summary counts
-            # AND the discovered rows' seen/filter delta buckets in the
-            # same job — this replaced the separate nonempty.count() and
-            # new_rows _count_and_buckets() jobs
+            # ≤ 7×n_buckets result rows give the wave summary counts AND
+            # the discovered rows' seen/filter delta buckets in one job
+            # over the checkpoint; the stage writes and stats aggregates
+            # below read the same slim rows
             sb_rows = (
                 frontier_delta.groupBy(
                     "state",
@@ -1323,7 +1346,7 @@ class CrawlEngine:
             # (max wave per key) happens on the bucket-pruned read
 
         # --- metrics + commit ---------------------------------------------------
-        # per-stage lineage over CACHED frames only (batch, the
+        # per-stage lineage over checkpointed frames only (batch, the
         # state-labeled frontier delta, new_rows) — a metric must never
         # re-run the pipeline it measures (the previous 'discovered'
         # metric re-ran the whole seen anti-join at metrics-write time)
@@ -1346,9 +1369,9 @@ class CrawlEngine:
         )
         self._metric(mframes, w, "discovered", new_rows)
 
-        # Stage all tables concurrently: every shared input (batch/ex/
-        # changed/new_rows/frontier_delta) is already materialized in the
-        # block cache, so the writes are independent Spark jobs —
+        # Stage all tables concurrently: every shared input (batch/
+        # checked/new_rows/frontier_delta) is already a checkpoint, so the
+        # writes are independent Spark jobs —
         # submitting them from threads overlaps scheduling and parquet
         # I/O, cutting fixed per-wave overhead. Bucketed tables are
         # hash-laid-out by the catalog (bucket(url_hash) — the layout the
@@ -1470,27 +1493,15 @@ class CrawlEngine:
                             "wave", F.lit(w)
                         ),
                     )
-        batch.unpersist()
-        ex.unpersist()
-        changed.unpersist()
-        deduped.unpersist()
-        new_rows.unpersist()
-        frontier_delta.unpersist()
-        if att_payloads is not None:
-            for h in att_payloads:
-                h.unpersist()
-        if fetch_cache is not None:
-            fetch_cache.unpersist()
         return {"wave": w, "done": False, "batch": n_batch, "fetched": n_fetched}
 
     def _finish_wave_no_batch(self, w, other_terminal):
         """All pending rows were gated/blocked: append their terminal
         versions (already state-labeled) to the frontier log, decrement
-        the pending counters, and commit the wave."""
-        outcome = (
-            other_terminal.select(*FRONTIER_COLS)
-            .withColumn("processed_wave", F.lit(w))
-            .persist()
+        the pending counters, and commit the wave. ``other_terminal``
+        reads the wave's consumed-rows checkpoint."""
+        outcome = other_terminal.select(*FRONTIER_COLS).withColumn(
+            "processed_wave", F.lit(w)
         )
         stats = self.cat.read("site_stats", schemas.SITE_STATS)
         consumed_delta = outcome.groupBy("site_id").agg(F.count("*").alias("_c"))
@@ -1503,7 +1514,6 @@ class CrawlEngine:
         self.cat.stage("frontier", outcome.select(*FRONTIER_COLS), w)
         self.cat.stage("site_stats", stats_next, w)
         self.cat.commit(w)
-        outcome.unpersist()
 
     # -- resolved views ----------------------------------------------------
 

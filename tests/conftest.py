@@ -1,7 +1,9 @@
 from __future__ import annotations
 
+import json
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -34,3 +36,42 @@ def corpus(tmp_path_factory):
 @pytest.fixture(scope="session")
 def corpus_dir(corpus):
     return corpus["dir"]
+
+
+def plan_nodes_of_job_group(spark, group: str) -> list[tuple[str, str]]:
+    """(name, description) of every plan node of the SQL executions that
+    ran a job in job group ``group``, read back from the driver's
+    in-process status store (works with the UI disabled). A node appears
+    once per execution it was planned in."""
+    sc = spark.sparkContext
+    jvm = sc._jvm
+    job_ids = set(sc.statusTracker().getJobIdsForGroup(group))
+    mapper = jvm.com.fasterxml.jackson.databind.ObjectMapper()
+    scala_mod = getattr(jvm.com.fasterxml.jackson.module.scala, "DefaultScalaModule$")
+    mapper.registerModule(getattr(scala_mod, "MODULE$"))
+    store = spark._jsparkSession.sharedState().statusStore()
+    nodes = []
+    for ex in json.loads(mapper.writeValueAsString(store.executionsList())):
+        if job_ids & {int(j) for j in ex["jobs"]}:
+            graph = json.loads(mapper.writeValueAsString(store.planGraph(ex["executionId"])))
+            nodes += [(n["name"], n["desc"]) for n in graph["allNodes"]]
+    return nodes
+
+
+@pytest.fixture
+def in_job_group(spark):
+    """Run ``fn()`` under a fresh job group; returns (result, plan nodes
+    of the SQL executions it ran on this thread)."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"test-group-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return out, plan_nodes_of_job_group(spark, group)
+
+    return run

@@ -84,3 +84,21 @@ def test_distributed_assign_seq_single_parent(spark):
         r["seq"] for r in assign_seq(links, max_seq, distributed=True, n_parts=8).collect()
     )
     assert got == list(range(1, 41))
+
+
+def test_distributed_assign_seq_runs_no_range_sampling_job(spark, in_job_group):
+    """The per-(bucket, site) counts are sorted on the driver: an orderBy
+    before the collect adds a range-partitioning exchange, whose sampling
+    job evaluates the input once more."""
+    links = spark.createDataFrame(
+        [(s, p, i) for s in ("a", "b") for p in range(1, 60) for i in range(3)],
+        "site_id string, parent_seq long, link_idx int",
+    )
+    max_seq = spark.createDataFrame([("a", 10), ("b", 0)], "site_id string, _max_seq long")
+    rows, nodes = in_job_group(
+        lambda: assign_seq(links, max_seq, distributed=True, n_parts=8).collect()
+    )
+    assert sorted(r["seq"] for r in rows if r["site_id"] == "a") == list(range(11, 188))
+    assert nodes, "no SQL execution recorded for the job group"
+    ranged = [d for n, d in nodes if n.startswith("Exchange") and "rangepartitioning" in d]
+    assert not ranged, ranged

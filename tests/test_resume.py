@@ -125,3 +125,53 @@ def test_stats_pending_counter_matches_actual(spark, corpus, tmp_path_factory):
         }
         for site, n in tracked.items():
             assert n == actual.get(site, 0), (site, n, actual.get(site, 0))
+
+
+def test_wave_releases_pinned_blocks(spark, corpus, tmp_path_factory):
+    """A wave pins each phase's output and must release every block
+    before run_wave returns — on the normal path and on the all-gated
+    early return (a wave whose whole pending set is KB-gated selects no
+    batch). A leaked block adds a cache-lookup entry to every later
+    action for the rest of the crawl."""
+    from crawler_spark import schemas
+    from crawler_spark.canon import canonicalize_udf
+    from crawler_spark.functions.urlfns import kb_pattern
+
+    corpus_dir = corpus["dir"]
+    jsc = spark.sparkContext._jsc
+
+    normal = _mk_engine(spark, corpus_dir, tmp_path_factory.mktemp("release_normal"))
+    normal.bootstrap()
+    before = jsc.getPersistentRDDs().size()
+    assert normal.run_wave()["batch"] > 0
+    assert jsc.getPersistentRDDs().size() <= before
+
+    # a KB that gates every seed URL (failure_count >= 3 on its pattern)
+    seeds = spark.read.parquet(f"{corpus_dir}/seeds.parquet")
+    kb = spark.createDataFrame(
+        seeds.select(
+            "site_id",
+            kb_pattern(canonicalize_udf("base_url")).alias("pattern"),
+            F.lit(0.0).alias("total_score"),
+            F.lit(0).cast("long").alias("count"),
+            F.lit(0.0).alias("avg_score"),
+            F.lit(3).cast("long").alias("failure_count"),
+        ).distinct().collect(),
+        schemas.KB,
+    )
+    gated = CrawlEngine(
+        spark,
+        str(tmp_path_factory.mktemp("release_gated")),
+        pages=spark.read.parquet(f"{corpus_dir}/pages.parquet"),
+        seeds=seeds,
+        kb_seed=kb,
+        config=CrawlConfig(mode="fifo", batch_size=20, metrics=False),
+    )
+    gated.bootstrap()
+    before = jsc.getPersistentRDDs().size()
+    res = gated.run_wave()
+    assert res["batch"] == 0 and not res["done"]
+    assert jsc.getPersistentRDDs().size() <= before
+    # the gated seeds were consumed as terminal rows
+    states = {r["state"] for r in gated.cat.read("frontier").collect()}
+    assert "gated_kb" in states

@@ -290,3 +290,31 @@ def test_crawl_with_cuckoo_equals_exact_path(spark, corpus, tmp_path_factory):
     assert filt and all(r["k"] == 4 for r in filt)
     total = sum(r["n_items"] for r in filt)
     assert total == len(sig(cuckoo, "seen", ["url_hash"]))
+
+
+def test_bloom_wave_runs_probe_cogroup_once(spark, corpus, tmp_path_factory, in_job_group):
+    """The wave checkpoints the admit phase's output and the confirm join
+    reads one probe pass: the probe cogroup is planned in exactly one SQL
+    execution of the wave, once. (Two filtered branches over the probe
+    ran it once per branch, in every job that consumed the admitted
+    rows.)"""
+    from crawler_spark.wave import CrawlConfig, CrawlEngine
+
+    corpus_dir = corpus["dir"]
+    eng = CrawlEngine(
+        spark,
+        str(tmp_path_factory.mktemp("bloom_once")),
+        pages=spark.read.parquet(f"{corpus_dir}/pages.parquet"),
+        seeds=spark.read.parquet(f"{corpus_dir}/seeds.parquet"),
+        config=CrawlConfig(
+            mode="fifo", batch_size=20, metrics=False, use_bloom=True,
+            distributed_seq=True, n_buckets=N_BUCKETS, bloom_expected_items=20_000,
+        ),
+    )
+    eng.bootstrap()
+    res, nodes = in_job_group(eng.run_wave)
+    assert res["batch"] > 0
+    probes = [
+        d for n, d in nodes if n.startswith("FlatMapCoGroupsInPandas") and "<lambda>(" in d
+    ]
+    assert len(probes) == 1, probes
