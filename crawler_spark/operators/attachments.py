@@ -63,12 +63,14 @@ _PDF_ESCAPES = {
     b"n": b"\n", b"r": b"\r", b"t": b"\t", b"b": b"\b", b"f": b"\f",
     b"(": b"(", b")": b")", b"\\": b"\\",
 }
+_PDF_OCTAL = frozenset(bytes([c]) for c in b"01234567")
 
 
 def _pdf_unescape(raw: bytes) -> bytes:
     """PDF literal-string escapes (ISO 32000-1 §7.3.4.2): named escapes,
-    1-3 digit octal codes, line continuations; an unknown ``\\x`` is the
-    char itself per spec."""
+    1-3 digit octal codes (digits 0-7 only), line continuations; an
+    unknown ``\\x`` — ``\\8`` and ``\\9`` included — is the char itself
+    per spec."""
     out = bytearray()
     i = 0
     while i < len(raw):
@@ -81,9 +83,9 @@ def _pdf_unescape(raw: bytes) -> bytes:
         if nxt in _PDF_ESCAPES:
             out += _PDF_ESCAPES[nxt]
             i += 2
-        elif nxt.isdigit():
+        elif nxt in _PDF_OCTAL:
             j = i + 1
-            while j < min(i + 4, len(raw)) and raw[j : j + 1].isdigit():
+            while j < min(i + 4, len(raw)) and raw[j : j + 1] in _PDF_OCTAL:
                 j += 1
             out.append(int(raw[i + 1 : j], 8) & 0xFF)
             i = j
@@ -96,14 +98,48 @@ def _pdf_unescape(raw: bytes) -> bytes:
 
 
 # show-text operators over a decoded content stream: literal-string
-# Tj / ' / ", TJ arrays (kerning numbers ignored), hex-string Tj
+# Tj / ' / ", TJ arrays (kerning numbers ignored), hex-string Tj. A bare
+# '[' is only the start of a candidate TJ array: _pdf_show_texts scans
+# its body, not a nested star here — on a bracket-heavy stream with no
+# closing ']' that star rescanned to the end from every '['.
 _PDF_LIT = rb"\(((?:\\.|[^\\()])*)\)"
-_PDF_SHOW_RE = re.compile(
-    _PDF_LIT + rb"\s*(?:Tj|'|\")"
-    + rb"|\[((?:" + _PDF_LIT + rb"|[^\]])*)\]\s*TJ"
-    + rb"|<([0-9A-Fa-f\s]+)>\s*Tj"
-)
+_PDF_SHOW_RE = re.compile(_PDF_LIT + rb"\s*(?:Tj|'|\")|\[|<([0-9A-Fa-f\s]+)>\s*Tj")
 _PDF_LIT_RE = re.compile(_PDF_LIT)
+# a TJ array body: literal strings (which may hold ']') and any other
+# byte but ']'; the alternatives start with distinct bytes, so the scan
+# is one linear pass that stops at the closing ']' or the stream's end
+_PDF_TJ_BODY_RE = re.compile(rb"(?:" + _PDF_LIT + rb"|\(|[^\](])*")
+_PDF_TJ_TAIL_RE = re.compile(rb"\]\s*TJ")
+
+
+def _pdf_show_texts(data: bytes):
+    """Text of each show-text operator in a decoded content stream, in
+    stream order. Linear in ``len(data)``: a '[' whose array scan fails
+    (no ']', or no TJ after it) marks every '[' up to where that scan
+    stopped as failing too, so no stretch is array-scanned twice."""
+    pos = 0
+    no_array_before = 0
+    while (m := _PDF_SHOW_RE.search(data, pos)) is not None:
+        lit, hexs = m.group(1), m.group(2)
+        pos = m.end()
+        if lit is not None:
+            yield _pdf_unescape(lit).decode("latin-1")
+        elif hexs is not None:
+            h = b"".join(hexs.split())
+            if len(h) % 2:
+                h += b"0"
+            yield bytes.fromhex(h.decode("ascii")).decode("latin-1")
+        elif m.start() >= no_array_before:  # '[': a TJ array iff '] TJ' ends it
+            body_end = _PDF_TJ_BODY_RE.match(data, pos).end()
+            tail = _PDF_TJ_TAIL_RE.match(data, body_end)
+            if tail is None:
+                no_array_before = body_end
+                continue
+            yield "".join(
+                _pdf_unescape(g.group(1)).decode("latin-1")
+                for g in _PDF_LIT_RE.finditer(data, pos, body_end)
+            )
+            pos = tail.end()
 
 
 def _iter_pdf_streams(content: bytes):
@@ -150,22 +186,7 @@ def _parse_pdf_minimal(content: bytes) -> str:
             data = body
         if b"BT" not in data:  # no text block in this stream
             continue
-        for m in _PDF_SHOW_RE.finditer(data):
-            lit, arr, _arr_lit, hexs = m.groups()
-            if lit is not None:
-                chunks.append(_pdf_unescape(lit).decode("latin-1"))
-            elif arr is not None:
-                chunks.append(
-                    "".join(
-                        _pdf_unescape(g.group(1)).decode("latin-1")
-                        for g in _PDF_LIT_RE.finditer(arr)
-                    )
-                )
-            elif hexs is not None:
-                h = b"".join(hexs.split())
-                if len(h) % 2:
-                    h += b"0"
-                chunks.append(bytes.fromhex(h.decode("ascii")).decode("latin-1"))
+        chunks += _pdf_show_texts(data)
     return "\n".join(c for c in chunks if c).strip()
 
 

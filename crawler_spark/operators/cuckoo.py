@@ -8,9 +8,11 @@ Compared to Bloom it supports deletion (needed if the frontier ever
 retracts URLs, e.g. robots rules arriving late) and ~95% load factor.
 
 Same partitioned layout as the Bloom path: one filter blob per url_hash
-bucket, built/updated in ``applyInPandas``. Insert order is inherently
-sequential (eviction chains), so the insert loop is per-batch Python —
-acceptable for a fallback; the hot default is the Bloom path.
+bucket, inserted into and probed by the shared operators of
+:mod:`crawler_spark.operators.seen` through this module's per-bucket
+:func:`new` / :func:`insert` / :func:`contains`. Insert order is
+inherently sequential (eviction chains), so the insert loop is per-batch
+Python — acceptable for a fallback; the hot default is the Bloom path.
 """
 
 from __future__ import annotations
@@ -120,14 +122,13 @@ class CuckooFilter:
         return f
 
 
-# --- Spark operators (interface parity with operators/bloom.py) -------------
+# --- per-bucket kernel (operators/seen.py, same interface as bloom.py) ------
 #
-# Same partitioned layout and table schema as the Bloom path: one filter
-# blob row per url_hash bucket in the ``seen_filters`` table
-# (schemas.SEEN_FILTERS — ``m_bits`` stores the cuckoo table's slot-row
-# count, ``k`` the slots per row). The wave loop selects the
-# implementation via CrawlConfig.seen_filter_kind; both compose with the
-# exact anti-join confirm, so correctness never depends on the filter.
+# Same table schema as the Bloom path (schemas.SEEN_FILTERS — ``m_bits``
+# stores the cuckoo table's slot-row count, ``k`` the slots per row). The
+# wave loop selects the kernel via CrawlConfig.seen_filter_kind; both
+# compose with the exact anti-join confirm, so correctness never depends
+# on the filter.
 
 def size_cuckoo(expected_items: int) -> int:
     """slot-rows-log2 for one bucket's table at the target load factor."""
@@ -158,135 +159,37 @@ def _insert_batch(f: "CuckooFilter", hashes: np.ndarray) -> bool:
     return True
 
 
-def build_cuckoo_filters(
-    seen, n_buckets: int = 32, expected_items: int = 200_000, fpr: float = 0.01
-):
-    """Build the seen_filters table from scratch (one cuckoo blob per
-    bucket). ``fpr`` is accepted for signature parity with the Bloom
-    builder; 16-bit fingerprints fix the cuckoo FPR at ~2·4/2^16 ≈ 1.2e−4
-    regardless."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from crawler_spark.schemas import SEEN_FILTERS as FILTERS_SCHEMA
-
-    log2_slots = size_cuckoo(max(1, expected_items // n_buckets))
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        f = CuckooFilter(n_slots_log2=log2_slots)
-        ok = _insert_batch(f, pdf["url_hash"].to_numpy(dtype=np.int64))
-        return pd.DataFrame(
-            {
-                "bucket": [int(pdf["bucket"].iloc[0])],
-                "n_items": [f.n_items if ok else _SATURATED],
-                "m_bits": [f.n_buckets],
-                "k": [_SLOTS_PER_BUCKET],
-                "filter_blob": [f.to_bytes()],
-            }
-        )
-
-    bucketed = seen.select(
-        F.pmod("url_hash", F.lit(n_buckets)).cast("int").alias("bucket"), "url_hash"
-    )
-    return bucketed.groupBy("bucket").applyInPandas(build, FILTERS_SCHEMA)
+def _row(f: CuckooFilter, ok: bool) -> dict:
+    return {
+        "n_items": f.n_items if ok else _SATURATED,
+        "m_bits": f.n_buckets,
+        "k": _SLOTS_PER_BUCKET,
+        "filter_blob": f.to_bytes(),
+    }
 
 
-def update_cuckoo_filters(
-    filters, new_keys, n_buckets: int = 32,
-    expected_items: int = 200_000, fpr: float = 0.01,
-):
-    """Insert one wave's new url_hashes into the per-bucket blobs."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from crawler_spark.schemas import SEEN_FILTERS as FILTERS_SCHEMA
-
-    log2_default = size_cuckoo(max(1, expected_items // n_buckets))
-
-    def merge(key, filt: pd.DataFrame, keys: pd.DataFrame) -> pd.DataFrame:
-        prior_items = int(filt["n_items"].iloc[0]) if len(filt) else 0
-        if len(filt):
-            f = CuckooFilter.from_bytes(
-                bytes(filt["filter_blob"].iloc[0]), max(prior_items, 0)
-            )
-        else:
-            f = CuckooFilter(n_slots_log2=log2_default)
-        # an already-saturated bucket stays saturated (its lookups are
-        # all-maybe-seen anyway — inserting more fingerprints is moot)
-        ok = prior_items >= 0 and (
-            _insert_batch(f, keys["url_hash"].to_numpy(dtype=np.int64))
-            if len(keys)
-            else True
-        )
-        return pd.DataFrame(
-            {
-                "bucket": [int(key[0])],
-                "n_items": [f.n_items if ok else _SATURATED],
-                "m_bits": [f.n_buckets],
-                "k": [_SLOTS_PER_BUCKET],
-                "filter_blob": [f.to_bytes()],
-            }
-        )
-
-    keys_b = new_keys.select(
-        F.pmod("url_hash", F.lit(n_buckets)).cast("int").alias("bucket"), "url_hash"
-    )
-    return (
-        filters.groupBy("bucket")
-        .cogroup(keys_b.groupBy("bucket"))
-        .applyInPandas(merge, FILTERS_SCHEMA)
-    )
+def new(expected_items: int, fpr: float) -> dict:
+    """An empty bucket filter sized for ``expected_items`` keys. ``fpr``
+    is accepted for interface parity with the Bloom kernel; 16-bit
+    fingerprints fix the cuckoo FPR at ~2·4/2^16 ≈ 1.2e−4 regardless."""
+    return _row(CuckooFilter(n_slots_log2=size_cuckoo(expected_items)), True)
 
 
-def cuckoo_flag(candidates, filters, n_buckets: int = 32):
-    """Annotate candidates with ``maybe_seen`` via the per-bucket blobs
-    (cogrouped per bucket, vectorized ``contains_many`` probe)."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import BooleanType, StructField, StructType
-
-    out_schema = StructType(
-        candidates.schema.fields + [StructField("maybe_seen", BooleanType())]
-    )
-    cand_cols = candidates.columns
-
-    def test(key, cand: pd.DataFrame, filt: pd.DataFrame) -> pd.DataFrame:
-        if not len(cand):
-            return pd.DataFrame(columns=cand_cols + ["maybe_seen"])
-        out = cand[cand_cols].copy()
-        if not len(filt):
-            out["maybe_seen"] = False
-            return out
-        n_items = int(filt["n_items"].iloc[0])
-        if n_items < 0:  # saturated bucket: every candidate pays the
-            out["maybe_seen"] = True  # exact confirm — no false negatives
-            return out
-        f = CuckooFilter.from_bytes(
-            bytes(filt["filter_blob"].iloc[0]), n_items
-        )
-        out["maybe_seen"] = f.contains_many(
-            cand["url_hash"].to_numpy(dtype=np.int64)
-        )
-        return out
-
-    cand_b = candidates.withColumn(
-        "_bucket", F.pmod("url_hash", F.lit(n_buckets)).cast("int")
-    )
-    return (
-        cand_b.groupBy("_bucket")
-        .cogroup(filters.groupBy("bucket"))
-        .applyInPandas(
-            lambda key, c, f: test(key, c.drop(columns=["_bucket"]), f),
-            out_schema,
-        )
-    )
+def insert(filt: dict, hashes: np.ndarray) -> dict:
+    """``filt`` with ``hashes`` inserted. An already-saturated bucket
+    stays saturated (its lookups are all-maybe-seen anyway — inserting
+    more fingerprints is moot)."""
+    if filt["n_items"] < 0:
+        return filt
+    f = CuckooFilter.from_bytes(filt["filter_blob"], filt["n_items"])
+    return _row(f, _insert_batch(f, hashes))
 
 
-def cuckoo_anti_join_seen(candidates, seen, filters, n_buckets: int = 32):
-    """Cuckoo-prefiltered anti-join, same composition as the Bloom path:
-    one probe pass, then only maybe-seen rows (true dups + tiny
-    fingerprint-FPR share) can match in the exact confirm join."""
-    from crawler_spark.operators.seen import confirm_maybe_seen
-
-    flagged = cuckoo_flag(candidates, filters, n_buckets)
-    return confirm_maybe_seen(flagged, seen, n_buckets)
+def contains(filt: dict, hashes: np.ndarray) -> np.ndarray:
+    """maybe-present flag per hash; a saturated bucket flags every
+    candidate, so each pays the exact confirm — no false negatives."""
+    if filt["n_items"] < 0:
+        return np.ones(len(hashes), dtype=bool)
+    return CuckooFilter.from_bytes(
+        filt["filter_blob"], filt["n_items"]
+    ).contains_many(hashes)

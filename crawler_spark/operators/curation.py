@@ -240,6 +240,24 @@ def curate_packets(
     return kept, failed
 
 
+def curate_and_route(
+    packets: DataFrame, rejected: DataFrame
+) -> tuple[DataFrame, DataFrame]:
+    """The storage-side curation stage of the wave loop and the streaming
+    worker: :func:`curate_packets` over the cascade's accepted packets,
+    with the repetition failures routed into the cascade's rejected rows
+    (reason ``curation_repetition``). Returns ``(packets, rejected)``."""
+    kept, failed = curate_packets(packets)
+    return kept, rejected.unionByName(
+        failed.select(
+            "site_id",
+            F.col("content_url").alias("canonical_url"),
+            F.xxhash64("content_url").alias("url_hash"),
+            F.lit("curation_repetition").alias("reason"),
+        )
+    )
+
+
 def decontaminate(
     df: DataFrame,
     bench_df: DataFrame,

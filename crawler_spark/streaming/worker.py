@@ -49,7 +49,6 @@ import os
 import warnings
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from crawler_spark import schemas
 from crawler_spark.operators.cascade import run_cascade
@@ -205,17 +204,9 @@ def start_stream_cascade(
             # storage-side curation guard: repetition spam never reaches
             # the packet sink and PII is redacted BEFORE persistence
             # (curation on the read path can't un-write a sink)
-            from crawler_spark.operators.curation import curate_packets
+            from crawler_spark.operators.curation import curate_and_route
 
-            packets, failed = curate_packets(packets)
-            rejected = rejected.unionByName(
-                failed.select(
-                    "site_id",
-                    F.col("content_url").alias("canonical_url"),
-                    F.xxhash64("content_url").alias("url_hash"),
-                    F.lit("curation_repetition").alias("reason"),
-                )
-            )
+            packets, rejected = curate_and_route(packets, rejected)
         # idempotent per-batch sinks: a replayed batch overwrites its own
         # partition dir instead of appending duplicate rows
         packets.write.mode("overwrite").parquet(

@@ -25,9 +25,9 @@ part of it.
 
 from __future__ import annotations
 
-import os
 import threading
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -52,8 +52,13 @@ from crawler_spark.operators.frontier import (
 )
 from crawler_spark.operators.kb import merge_kb, wave_kb_delta
 from crawler_spark.operators.politeness import host_quotas, robots_filter
-from crawler_spark.operators.bloom import FILTERS_SCHEMA
-from crawler_spark.operators.seen import anti_join_seen, dedup_in_wave
+from crawler_spark.operators import bloom, cuckoo
+from crawler_spark.operators.seen import (
+    anti_join_seen,
+    dedup_in_wave,
+    filtered_anti_join_seen,
+    insert_filters,
+)
 from crawler_spark.tableio import (
     APPEND,
     BUCKET_APPEND,
@@ -97,25 +102,48 @@ def frontier_hot() -> Column:
     return F.col("state") == "pending"
 
 
-_PROFILE = os.environ.get("SPARK_GRAFT_PROFILE", "0") != "0"
-
 # Serializes run_wave's session-scoped AQE save/toggle/restore across
 # engines sharing one SparkSession (see run_wave docstring).
 _WAVE_CONF_LOCK = threading.Lock()
 
 
-class _T:
-    """Env-gated section timer for wave profiling."""
-
-    def __init__(self, label):
-        self.label = label
-
-    def __enter__(self):
-        self.t0 = time.time()
-
-    def __exit__(self, *a):
-        if _PROFILE:
-            print(f"    [{self.label}] {time.time() - self.t0:.2f}s", flush=True)
+def _stats_next(stats: DataFrame, frontier_delta: DataFrame) -> DataFrame:
+    """site_stats after a wave, from the wave's frontier delta alone
+    (scanned = rows that yielded text this wave; consumed = every
+    terminal row; discovered = the pending rows) — the checkpointed
+    delta is aggregated, never the frames it was built from."""
+    scanned_delta = (
+        frontier_delta.filter(F.col("state").isin("fetched", "unchanged"))
+        .groupBy("site_id")
+        .agg(F.count("*").alias("_d"))
+    )
+    new_seq = (
+        frontier_delta.filter(F.col("state") == "pending")
+        .groupBy("site_id")
+        .agg(F.max("seq").alias("_new_max"), F.count("*").alias("_new_n"))
+    )
+    consumed_delta = (
+        frontier_delta.filter(F.col("state") != "pending")
+        .groupBy("site_id")
+        .agg(F.count("*").alias("_c"))
+    )
+    return (
+        stats.join(scanned_delta, "site_id", "left")
+        .join(new_seq, "site_id", "left")
+        .join(consumed_delta, "site_id", "left")
+        .select(
+            "site_id",
+            (F.col("scanned") + F.coalesce("_d", F.lit(0))).alias("scanned"),
+            F.greatest(F.col("max_seq"), F.coalesce("_new_max", F.lit(0))).alias(
+                "max_seq"
+            ),
+            (
+                F.col("n_pending")
+                - F.coalesce("_c", F.lit(0))
+                + F.coalesce("_new_n", F.lit(0))
+            ).alias("n_pending"),
+        )
+    )
 
 
 class _WaveCheckpoints:
@@ -135,9 +163,8 @@ class _WaveCheckpoints:
         self._sc = spark.sparkContext._jsc.sc()
         self._rdd_ids: list[int] = []
 
-    def take(self, label: str, df: DataFrame) -> DataFrame:
-        with _T(label):
-            cp = df.localCheckpoint(eager=True)
+    def take(self, df: DataFrame) -> DataFrame:
+        cp = df.localCheckpoint(eager=True)
         self._rdd_ids.append(cp._jdf.queryExecution().logical().rdd().id())
         return cp
 
@@ -269,6 +296,10 @@ class CrawlEngine:
     ):
         self.spark = spark
         self.config = config or CrawlConfig()
+        # per-bucket kernel behind the seen_filters prefilter (use_bloom)
+        self._seen_kernel = (
+            cuckoo if self.config.seen_filter_kind == "cuckoo" else bloom
+        )
         self.pages = pages
         self.seeds_df = seeds
         # simulated attachment payloads (url, payload) for
@@ -480,8 +511,8 @@ class CrawlEngine:
         # read `parsed`, and the two stage jobs run concurrently — a lazy
         # cache would let racing tasks each compute the unfilled
         # partitions, fetching and parsing every attachment twice.
-        payloads = ckpt.take("attachments.fetch", payloads)
-        parsed = ckpt.take("attachments.parse", parse_attachments(payloads))
+        payloads = ckpt.take(payloads)
+        parsed = ckpt.take(parse_attachments(payloads))
         blocks = (
             att.join(
                 parsed.withColumnRenamed("url", "attachment_url"), "attachment_url"
@@ -506,20 +537,6 @@ class CrawlEngine:
         )
         return blocks, failures
 
-    def _filter_ops(self):
-        """(build, update, anti_join) for the configured seen prefilter."""
-        if self.config.seen_filter_kind == "cuckoo":
-            from crawler_spark.operators import cuckoo as m
-
-            return (
-                m.build_cuckoo_filters,
-                m.update_cuckoo_filters,
-                m.cuckoo_anti_join_seen,
-            )
-        from crawler_spark.operators import bloom as m
-
-        return m.build_filters, m.update_filters, m.bloom_anti_join_seen
-
     def _sitemap_rows(self, frontier0: DataFrame) -> DataFrame:
         """Sitemap-discovered wave-0 frontier rows (sitemap_seeding).
 
@@ -533,7 +550,6 @@ class CrawlEngine:
 
         from crawler_spark.operators.sitemaps import sitemap_candidates
 
-        cfg = self.config
         cand = sitemap_candidates(
             self.spark,
             self.seeds_df,
@@ -542,31 +558,8 @@ class CrawlEngine:
             # must not override the sitemap fetcher's polite defaults
             **self._boot_opts,
         ).withColumn("parent_seq", F.lit(1).cast("long"))
-        base = self.seeds_df.select(
-            "site_id",
-            (
-                netloc_of(F.col("base_url"))
-                if cfg.same_domain_only
-                else F.lit("*")
-            ).alias("base_netloc"),
-        )
-        cand = cand.join(F.broadcast(base), "site_id")
-        if cfg.same_domain_only:
-            validity = is_valid_url(F.col("url"), F.col("base_netloc"))
-        else:
-            validity = (
-                F.parse_url(F.col("url"), F.lit("PROTOCOL")).isin("http", "https")
-                & ~F.col("url").contains("#")
-                & ~F.col("url").contains("javascript:void(0)")
-            )
-        valid = (
-            with_canonical_split(cand.filter(validity).drop("base_netloc"), "url")
-            .withColumn("url_hash", F.xxhash64("canonical_url"))
-            .withColumn(
-                "host", F.lower(F.parse_url("canonical_url", F.lit("HOST")))
-            )
-        )
-        fresh = dedup_in_wave(valid).join(
+        cand = cand.join(self._seed_dim().select("site_id", "base_netloc"), "site_id")
+        fresh = self._admit_links(cand).join(
             frontier0.select("url_hash", "canonical_url"),
             ["url_hash", "canonical_url"],
             "left_anti",
@@ -652,30 +645,7 @@ class CrawlEngine:
                 F.lit(1).cast("long").alias("n_pending"),
             )
 
-        self.cat.stage("frontier", frontier0, 0)
-        self.cat.stage("seen", seen0, 0)
-        self.cat.stage("kb", kb0, 0)
-        self.cat.stage("ledger", ledger0, 0)
-        self.cat.stage("site_stats", stats0, 0)
-        if self.config.use_bloom:
-            # Seed keys MUST be in the wave-0 filters: update_filters only
-            # adds each wave's new rows, so a missing bootstrap build
-            # would leave seed URLs permanently invisible to the
-            # prefilter (they'd skip the exact confirm join and re-enter
-            # seen/frontier as duplicates).
-            build_filters, _, _ = self._filter_ops()
-
-            self.cat.stage(
-                "seen_filters",
-                build_filters(
-                    seen0,
-                    self.config.n_buckets,
-                    self.config.bloom_expected_items,
-                    self.config.bloom_fpr,
-                ),
-                0,
-            )
-        self.cat.commit(0)
+        self._commit_wave0(frontier0, seen0, kb0, ledger0, stats0)
         if self._pages_fetch is not None:
             self._pages_fetch.count()  # warm the bucketed fetch cache
 
@@ -736,12 +706,11 @@ class CrawlEngine:
             "site_id", "url_hash", "canonical_url", F.lit(0).alias("discovered_wave")
         )
         frontier0 = frontier0.persist()
-        self.cat.stage("frontier", frontier0, 0)
-        self.cat.stage("seen", seen0, 0)
-        self.cat.stage("kb", self.spark.createDataFrame([], schemas.KB), 0)
-        self.cat.stage("ledger", self.spark.createDataFrame([], schemas.LEDGER_LOG), 0)
-        self.cat.stage(
-            "site_stats",
+        self._commit_wave0(
+            frontier0,
+            seen0,
+            self.spark.createDataFrame([], schemas.KB),
+            self.spark.createDataFrame([], schemas.LEDGER_LOG),
             self.seeds_df.select("site_id", F.lit(0).cast("long").alias("scanned"))
             .join(
                 frontier0.groupBy("site_id").agg(
@@ -757,25 +726,37 @@ class CrawlEngine:
                 F.coalesce("max_seq", F.lit(0)).alias("max_seq"),
                 F.coalesce("n_pending", F.lit(0)).alias("n_pending"),
             ),
-            0,
         )
-        if self.config.use_bloom:
-            build_filters, _, _ = self._filter_ops()
-
-            self.cat.stage(
-                "seen_filters",
-                build_filters(
-                    seen0,
-                    self.config.n_buckets,
-                    self.config.bloom_expected_items,
-                    self.config.bloom_fpr,
-                ),
-                0,
-            )
-        self.cat.commit(0)
         frontier0.unpersist()
         base.unpersist()
         self._pages_fetch.count()  # warm the bucketed fetch cache
+
+    def _commit_wave0(self, frontier0, seen0, kb0, ledger0, stats0) -> None:
+        """Stage and commit the wave-0 state tables. With a seen
+        prefilter, the seed keys go into the wave-0 filters: each wave's
+        insert only adds that wave's new rows, so without them seed URLs
+        would stay invisible to the prefilter (they'd skip the exact
+        confirm join and re-enter seen/frontier as duplicates)."""
+        cfg = self.config
+        for name, df in [
+            ("frontier", frontier0),
+            ("seen", seen0),
+            ("kb", kb0),
+            ("ledger", ledger0),
+            ("site_stats", stats0),
+        ]:
+            self.cat.stage(name, df, 0)
+        if cfg.use_bloom:
+            filters0 = insert_filters(
+                self.spark.createDataFrame([], schemas.SEEN_FILTERS),
+                seen0,
+                self._seen_kernel,
+                cfg.n_buckets,
+                cfg.bloom_expected_items,
+                cfg.bloom_fpr,
+            )
+            self.cat.stage("seen_filters", filters0, 0)
+        self.cat.commit(0)
 
     # -- helpers ----------------------------------------------------------
 
@@ -844,6 +825,26 @@ class CrawlEngine:
             )
         )
 
+    def _admit_links(self, links: DataFrame) -> DataFrame:
+        """The admission pipeline for discovered URLs — link-expanded and
+        sitemap-seeded alike: validity gate against the row's
+        ``base_netloc``, canonical split, ``url_hash``/``host``, then
+        in-wave dedup (first enqueuer wins)."""
+        if self.config.same_domain_only:
+            validity = is_valid_url(F.col("url"), F.col("base_netloc"))
+        else:
+            validity = (
+                F.parse_url(F.col("url"), F.lit("PROTOCOL")).isin("http", "https")
+                & ~F.col("url").contains("#")
+                & ~F.col("url").contains("javascript:void(0)")
+            )
+        valid = (
+            with_canonical_split(links.filter(validity).drop("base_netloc"), "url")
+            .withColumn("url_hash", F.xxhash64("canonical_url"))
+            .withColumn("host", F.lower(F.parse_url("canonical_url", F.lit("HOST"))))
+        )
+        return dedup_in_wave(valid)
+
     def _batch_sizes(self):
         if self.config.batch_size is not None:
             return self.seeds_df.select(
@@ -856,13 +857,6 @@ class CrawlEngine:
                 F.least(F.lit(20), (F.col("max_pages") / 5).cast("int")), F.lit(1)
             ).alias("batch_size"),
         )
-
-    def _buckets_of(self, df: DataFrame, n_buckets: int) -> list[int]:
-        """Distinct url_hash bucket ids present in ``df`` (driver-side,
-        bounded by n_buckets rows — the partition-pruning predicate for
-        read_buckets / the touched-bucket list for upserts)."""
-        _, buckets = self._count_and_buckets(df, n_buckets)
-        return buckets
 
     def _count_and_buckets(
         self, df: DataFrame, n_buckets: int
@@ -955,13 +949,12 @@ class CrawlEngine:
         # n_pending is carried incrementally in site_stats (discovered −
         # consumed), so the done / skip-budget checks read a tiny
         # snapshot instead of scanning+counting the whole pending set
-        with _T("pending.count"):
-            row = (
-                stats.join(F.broadcast(active), "site_id")
-                .agg(F.sum("n_pending").alias("_n"))
-                .first()
-            )
-            n_pending = int(row["_n"] or 0)
+        row = (
+            stats.join(F.broadcast(active), "site_id")
+            .agg(F.sum("n_pending").alias("_n"))
+            .first()
+        )
+        n_pending = int(row["_n"] or 0)
         if n_pending == 0:
             return {"wave": w, "done": True, "fetched": 0}
 
@@ -1009,19 +1002,17 @@ class CrawlEngine:
         # the checkpoint instead of re-scanning the frontier log and
         # re-broadcasting the KB and robots tables.
         consumed = ckpt.take(
-            "select",
             batch.select(*FRONTIER_COLS).unionByName(
                 other_terminal.select(*FRONTIER_COLS)
-            ),
+            )
         )
         batch = consumed.filter(F.col("state") == "pending")
         other_terminal = consumed.filter(F.col("state") != "pending")
-        with _T("batch.count"):
-            # the ledger-probe bucket list for the change check
-            n_batch, batch_buckets = self._count_and_buckets(batch, cfg.n_buckets)
+        # the ledger-probe bucket list for the change check
+        n_batch, batch_buckets = self._count_and_buckets(batch, cfg.n_buckets)
         if n_batch == 0:
             # everything pending was gated: consume it and commit the wave
-            self._finish_wave_no_batch(w, other_terminal)
+            self._finish_wave_no_batch(w, other_terminal, stats)
             return {"wave": w, "done": False, "fetched": 0, "batch": 0}
 
         # --- fetch ---------------------------------------------------------
@@ -1034,11 +1025,10 @@ class CrawlEngine:
             from crawler_spark.operators.fetch import http_fetch
 
             fetched = ckpt.take(
-                "fetch",
                 http_fetch(
                     batch.repartition(cfg.n_buckets, F.col("url_hash")),
                     **(cfg.http_opts or {}),
-                ),
+                )
             )
             if cfg.warc_out:
                 # Archive the wave's fetched pages (S4's raw-bytes twin)
@@ -1115,7 +1105,6 @@ class CrawlEngine:
             F.length(F.col("ex.text")) > 0
         )
         checked = ckpt.take(
-            "extract",
             ex.withColumn(
                 "content_hash", F.when(nonempty_cond, content_hash(F.col("ex.text")))
             )
@@ -1183,26 +1172,11 @@ class CrawlEngine:
             "link_idx",
             F.col("_link.url").alias("url"),
         )
-        if cfg.same_domain_only:
-            validity = is_valid_url(F.col("url"), F.col("base_netloc"))
-        else:
-            validity = (
-                F.parse_url(F.col("url"), F.lit("PROTOCOL")).isin("http", "https")
-                & ~F.col("url").contains("#")
-                & ~F.col("url").contains("javascript:void(0)")
-            )
-        valid = exploded.filter(validity).drop("base_netloc")
-        valid = (
-            with_canonical_split(valid, "url")
-            .withColumn("url_hash", F.xxhash64("canonical_url"))
-            .withColumn("host", F.lower(F.parse_url("canonical_url", F.lit("HOST"))))
-        )
-        deduped = ckpt.take("expand", dedup_in_wave(valid))
+        deduped = ckpt.take(self._admit_links(exploded))
         # Read only the seen buckets the candidates can possibly match
         # (same-bucket-iff-same-hash) — the anti-join's right side scales
         # with the wave's candidate spread, not the full seen set.
-        with _T("deduped.buckets"):
-            cand_buckets = self._buckets_of(deduped, cfg.n_buckets)
+        _, cand_buckets = self._count_and_buckets(deduped, cfg.n_buckets)
         seen_sub = cat.read_buckets("seen", cand_buckets, schemas.SEEN)
         if cfg.use_bloom:
             # Same pruning predicate as the exact seen read: candidates in
@@ -1211,21 +1185,23 @@ class CrawlEngine:
             # is pure waste — at 10^10 keys an unpruned read ships the
             # entire ~12 GB filter state through the cogroup shuffle every
             # wave even when the wave touches a handful of buckets.
-            filters = cat.read_buckets("seen_filters", cand_buckets, FILTERS_SCHEMA)
-            _, _, filter_anti_join = self._filter_ops()
-            fresh = filter_anti_join(deduped, seen_sub, filters, cfg.n_buckets)
+            filters = cat.read_buckets(
+                "seen_filters", cand_buckets, schemas.SEEN_FILTERS
+            )
+            fresh = filtered_anti_join_seen(
+                deduped, seen_sub, filters, self._seen_kernel, cfg.n_buckets
+            )
         else:
             fresh = anti_join_seen(deduped, seen_sub, cfg.n_buckets)
-        fresh = ckpt.take("admit", fresh)  # assign_seq reads it three times
+        fresh = ckpt.take(fresh)  # assign_seq reads it three times
 
         # per-site seq high-water mark carried in site_stats — no
         # full-frontier aggregate per wave
         max_seq = stats.select("site_id", F.col("max_seq").alias("_max_seq"))
-        with _T("assign_seq"):
-            # distributed=True runs its bounds and counts collects here
-            seq_rows = assign_seq(
-                fresh, max_seq, distributed=cfg.distributed_seq, n_parts=cfg.n_buckets
-            )
+        # distributed=True runs its bounds and counts collects here
+        seq_rows = assign_seq(
+            fresh, max_seq, distributed=cfg.distributed_seq, n_parts=cfg.n_buckets
+        )
         seq_rows = seq_rows.select(
             "url",
             "canonical_url",
@@ -1241,12 +1217,12 @@ class CrawlEngine:
             "seq",
             F.lit(None).cast("int").alias("processed_wave"),
         ).select(*FRONTIER_COLS)
-        new_rows = ckpt.take("sequence", seq_rows)
+        new_rows = ckpt.take(seq_rows)
         # --- frontier / seen / stats updates ---------------------------------
         outcome = (
             checked.withColumn("state", F.col("_state"))
             .select(*FRONTIER_COLS)
-            .unionByName(other_terminal.select(*FRONTIER_COLS))
+            .unionByName(other_terminal)
             .withColumn("processed_wave", F.lit(w))
         )
         # Frontier log append: this wave's delta is exactly the terminal
@@ -1260,26 +1236,20 @@ class CrawlEngine:
         # read re-unions; coalesce (no shuffle) bounds the delta to
         # n_buckets tasks/files while keeping the write parallel
         frontier_delta = ckpt.take(
-            "delta",
-            outcome.select(*FRONTIER_COLS)
-            .unionByName(new_rows)
-            .coalesce(cfg.n_buckets),
+            outcome.unionByName(new_rows).coalesce(cfg.n_buckets)
         )
-        with _T("delta.states"):
-            # ≤ 7×n_buckets result rows give the wave summary counts AND
-            # the discovered rows' seen/filter delta buckets in one job
-            # over the checkpoint; the stage writes and stats aggregates
-            # below read the same slim rows
-            sb_rows = (
-                frontier_delta.groupBy(
-                    "state",
-                    F.pmod(F.col("url_hash"), F.lit(cfg.n_buckets))
-                    .cast("int")
-                    .alias("_b"),
-                )
-                .count()
-                .collect()
+        # ≤ 7×n_buckets result rows give the wave summary counts AND
+        # the discovered rows' seen/filter delta buckets in one job over
+        # the checkpoint; the stage writes and stats aggregates below
+        # read the same slim rows
+        sb_rows = (
+            frontier_delta.groupBy(
+                "state",
+                F.pmod(F.col("url_hash"), F.lit(cfg.n_buckets)).cast("int").alias("_b"),
             )
+            .count()
+            .collect()
+        )
         state_counts: dict[str, int] = {}
         s_bucket_set = set()
         for r in sb_rows:
@@ -1297,42 +1267,7 @@ class CrawlEngine:
         seen_delta = new_rows.select(
             "site_id", "url_hash", "canonical_url", F.lit(w).alias("discovered_wave")
         )
-        # per-site stats deltas all derive from the CACHED frontier_delta
-        # (scanned = rows that yielded text this wave; consumed = every
-        # terminal row; discovered = the pending rows) — identical
-        # values to aggregating the source frames, zero recomputation
-        scanned_delta = (
-            frontier_delta.filter(F.col("state").isin("fetched", "unchanged"))
-            .groupBy("site_id")
-            .agg(F.count("*").alias("_d"))
-        )
-        new_seq = (
-            frontier_delta.filter(F.col("state") == "pending")
-            .groupBy("site_id")
-            .agg(F.max("seq").alias("_new_max"), F.count("*").alias("_new_n"))
-        )
-        consumed_delta = (
-            frontier_delta.filter(F.col("state") != "pending")
-            .groupBy("site_id")
-            .agg(F.count("*").alias("_c"))
-        )
-        stats_next = (
-            stats.join(scanned_delta, "site_id", "left")
-            .join(new_seq, "site_id", "left")
-            .join(consumed_delta, "site_id", "left")
-            .select(
-                "site_id",
-                (F.col("scanned") + F.coalesce("_d", F.lit(0))).alias("scanned"),
-                F.greatest(
-                    F.col("max_seq"), F.coalesce("_new_max", F.lit(0))
-                ).alias("max_seq"),
-                (
-                    F.col("n_pending")
-                    - F.coalesce("_c", F.lit(0))
-                    + F.coalesce("_new_n", F.lit(0))
-                ).alias("n_pending"),
-            )
-        )
+        stats_next = _stats_next(stats, frontier_delta)
 
         # --- cascade (phase-2 worker) -----------------------------------------
         kb_next = kb
@@ -1390,10 +1325,10 @@ class CrawlEngine:
             stage_jobs.append(("seen", seen_delta, None))
         if cfg.use_bloom and s_buckets:
             # only the blobs of buckets that gained keys are rewritten
-            _, filter_update, _ = self._filter_ops()
-            filters_next = filter_update(
+            filters_next = insert_filters(
                 filters.filter(F.col("bucket").isin(s_buckets)),
                 new_rows.select("url_hash"),
+                self._seen_kernel,
                 cfg.n_buckets,
                 cfg.bloom_expected_items,
                 cfg.bloom_fpr,
@@ -1403,19 +1338,13 @@ class CrawlEngine:
             packets_out = cascade_out["packets"]
             rejected_out = cascade_out["rejected"]
             if cfg.curate:
-                # storage-side curation guard, identical to the streaming
-                # worker's curate=True stage: repetition spam never lands
-                # in the packets table and PII is redacted pre-commit
-                from crawler_spark.operators.curation import curate_packets
+                # storage-side curation guard, the streaming worker's
+                # curate=True stage: repetition spam never lands in the
+                # packets table and PII is redacted pre-commit
+                from crawler_spark.operators.curation import curate_and_route
 
-                packets_out, curation_failed = curate_packets(packets_out)
-                rejected_out = rejected_out.unionByName(
-                    curation_failed.select(
-                        "site_id",
-                        F.col("content_url").alias("canonical_url"),
-                        F.xxhash64("content_url").alias("url_hash"),
-                        F.lit("curation_repetition").alias("reason"),
-                    )
+                packets_out, rejected_out = curate_and_route(
+                    packets_out, rejected_out
                 )
             # kb/ledger change only when the cascade ran; otherwise the
             # previous snapshots stay current (no pointless rewrite)
@@ -1433,27 +1362,15 @@ class CrawlEngine:
             # metrics delta to one write task per bucket
             stage_jobs.append(("metrics", allm.coalesce(cfg.n_buckets), None))
 
-        with _T("stage.all"):
-            from concurrent.futures import ThreadPoolExecutor
-
-            def _stage_one(name, df, touched):
-                t0 = time.time()
-                cat.stage(name, df, w, touched)
-                if _PROFILE:
-                    print(
-                        f"      [stage.{name}] {time.time() - t0:.2f}s",
-                        flush=True,
-                    )
-
-            # one worker per staged table: the writes are tiny independent
-            # jobs over cached inputs — with fewer workers than tables the
-            # tail tables wait a full scheduling round for no reason
-            with ThreadPoolExecutor(max_workers=max(4, len(stage_jobs))) as pool:
-                for fu in [
-                    pool.submit(_stage_one, name, df, touched)
-                    for name, df, touched in stage_jobs
-                ]:
-                    fu.result()
+        # one worker per staged table: the writes are tiny independent
+        # jobs over cached inputs — with fewer workers than tables the
+        # tail tables wait a full scheduling round for no reason
+        with ThreadPoolExecutor(max_workers=max(4, len(stage_jobs))) as pool:
+            for fu in [
+                pool.submit(cat.stage, name, df, w, touched)
+                for name, df, touched in stage_jobs
+            ]:
+                fu.result()
 
         # Decide compaction BEFORE the commit so the terminal counter's
         # reset/advance publishes atomically with this wave's deltas
@@ -1472,47 +1389,35 @@ class CrawlEngine:
             cat.set_meta(
                 "frontier_terminal_since_compact", 0 if do_compact else terminal_since
             )
-        with _T("commit"):
-            cat.commit(w)
+        cat.commit(w)
         if do_compact:
             # Iceberg maintenance stand-in: coalesce delta stacks; the
             # MOR logs are rewritten RESOLVED (superseded versions drop)
-            with _T("compact"):
-                cat.compact("seen")
-                # frontier: live pending rows stay hot, resolved terminal
-                # rows leave for the archive — the pending view then
-                # scans only live rows + post-compaction deltas instead
-                # of all-time crawl history
-                cat.compact_split(
-                    "frontier", "frontier_archive", resolve_frontier, frontier_hot()
+            cat.compact("seen")
+            # frontier: live pending rows stay hot, resolved terminal rows
+            # leave for the archive — the pending view then scans only
+            # live rows + post-compaction deltas instead of all-time crawl
+            # history
+            cat.compact_split(
+                "frontier", "frontier_archive", resolve_frontier, frontier_hot()
+            )
+            if cfg.cascade:
+                cat.compact(
+                    "ledger",
+                    resolver=lambda log: resolve_ledger(log).withColumn(
+                        "wave", F.lit(w)
+                    ),
                 )
-                if cfg.cascade:
-                    cat.compact(
-                        "ledger",
-                        resolver=lambda log: resolve_ledger(log).withColumn(
-                            "wave", F.lit(w)
-                        ),
-                    )
         return {"wave": w, "done": False, "batch": n_batch, "fetched": n_fetched}
 
-    def _finish_wave_no_batch(self, w, other_terminal):
+    def _finish_wave_no_batch(self, w, other_terminal, stats):
         """All pending rows were gated/blocked: append their terminal
         versions (already state-labeled) to the frontier log, decrement
         the pending counters, and commit the wave. ``other_terminal``
         reads the wave's consumed-rows checkpoint."""
-        outcome = other_terminal.select(*FRONTIER_COLS).withColumn(
-            "processed_wave", F.lit(w)
-        )
-        stats = self.cat.read("site_stats", schemas.SITE_STATS)
-        consumed_delta = outcome.groupBy("site_id").agg(F.count("*").alias("_c"))
-        stats_next = stats.join(consumed_delta, "site_id", "left").select(
-            "site_id",
-            "scanned",
-            "max_seq",
-            (F.col("n_pending") - F.coalesce("_c", F.lit(0))).alias("n_pending"),
-        )
-        self.cat.stage("frontier", outcome.select(*FRONTIER_COLS), w)
-        self.cat.stage("site_stats", stats_next, w)
+        outcome = other_terminal.withColumn("processed_wave", F.lit(w))
+        self.cat.stage("frontier", outcome, w)
+        self.cat.stage("site_stats", _stats_next(stats, outcome), w)
         self.cat.commit(w)
 
     # -- resolved views ----------------------------------------------------

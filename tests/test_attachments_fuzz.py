@@ -207,3 +207,45 @@ def test_pdf_broken_payload_still_sentinels():
     t, ok = parse_attachment("https://h/files/junk.pdf", b"\x00\x01\x02 not a pdf")
     assert not ok
     assert PARSE_FAIL_SENTINEL.format(name="junk.pdf") in t
+
+
+def test_pdf_octal_escape_takes_only_octal_digits():
+    """Only \\0-\\7 start an octal code (ISO 32000-1 §7.3.4.2); \\8 and \\9
+    are unknown escapes and yield the digit itself. Treating them as
+    octal raised ValueError and sent the whole attachment to the
+    failure sentinel."""
+    from crawler_spark.operators.attachments import _pdf_unescape
+
+    assert _pdf_unescape(b"a\\8b\\9c") == b"a8b9c"
+    assert _pdf_unescape(b"\\48\\101\\0") == b"\x048A\x00"
+    pdf = _mk_pdf(b"BT (page \\9 of \\8) Tj ET")
+    t, ok = parse_attachment("https://h/files/octal.pdf", pdf)
+    assert ok, t
+    assert "page 9 of 8" in t
+
+
+def test_pdf_bracket_bomb_is_linear():
+    """A stream of 20k '[' with no closing ']' made the TJ-array regex
+    rescan to the end from every '[' (quadratic); the bounded scan
+    finishes well under a second and the empty result lands on the
+    failure sentinel."""
+    import time
+
+    for compress in (False, True):
+        pdf = _mk_pdf(b"BT" + b"[" * 20_000, compress=compress)
+        t0 = time.perf_counter()
+        t, ok = parse_attachment("https://h/files/bomb.pdf", pdf)
+        assert time.perf_counter() - t0 < 1.0
+        assert not ok
+        assert PARSE_FAIL_SENTINEL.format(name="bomb.pdf") in t
+
+
+def test_pdf_tj_arrays_around_brackets():
+    """TJ arrays whose literals hold ']' still parse whole; a '[' that
+    opens no TJ array leaves the show-text operators inside it intact."""
+    from crawler_spark.operators.attachments import _parse_pdf_minimal
+
+    cs = b"BT [(a]b) -5 (c)] TJ [ (d) Tj ] (e) Tj [(f) Tj ET"
+    assert _parse_pdf_minimal(_mk_pdf(cs, compress=False)).split("\n") == [
+        "a]bc", "d", "e", "f",
+    ]

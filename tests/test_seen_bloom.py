@@ -8,12 +8,23 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from crawler_spark.operators import bloom
+from crawler_spark.operators import bloom, cuckoo
 from crawler_spark.operators.cuckoo import CuckooFilter
-from crawler_spark.operators.seen import anti_join_seen
+from crawler_spark.operators.seen import (
+    anti_join_seen,
+    filtered_anti_join_seen,
+    flag_maybe_seen,
+    insert_filters,
+)
+from crawler_spark.schemas import SEEN_FILTERS
 
 N_BUCKETS = 8
 FPR = 0.01
+
+
+def _build(spark, keys, kernel, **kw):
+    """The wave-0 build: the shared insert into an empty seen_filters."""
+    return insert_filters(spark.createDataFrame([], SEEN_FILTERS), keys, kernel, **kw)
 
 
 @pytest.fixture(scope="module")
@@ -41,16 +52,16 @@ def test_scalar_vs_vector_probe_consistency():
 def test_bloom_no_false_negatives_and_fpr(spark, hash_sets):
     seen, fresh = hash_sets
     seen_df = spark.createDataFrame([(int(h),) for h in seen], "url_hash long")
-    filters = bloom.build_filters(
-        seen_df, n_buckets=N_BUCKETS, expected_items=len(seen), fpr=FPR
+    filters = _build(
+        spark, seen_df, bloom, n_buckets=N_BUCKETS, expected_items=len(seen), fpr=FPR
     ).persist()
 
-    flagged_seen = bloom.bloom_flag(seen_df, filters, N_BUCKETS)
+    flagged_seen = flag_maybe_seen(seen_df, filters, bloom, N_BUCKETS)
     n_missed = flagged_seen.filter(~F.col("maybe_seen")).count()
     assert n_missed == 0  # zero false negatives
 
     fresh_df = spark.createDataFrame([(int(h),) for h in fresh], "url_hash long")
-    n_fp = bloom.bloom_flag(fresh_df, filters, N_BUCKETS).filter("maybe_seen").count()
+    n_fp = flag_maybe_seen(fresh_df, filters, bloom, N_BUCKETS).filter("maybe_seen").count()
     measured_fpr = n_fp / len(fresh)
     assert measured_fpr <= 3 * FPR, measured_fpr
     filters.unpersist()
@@ -66,15 +77,17 @@ def test_bloom_anti_join_equals_exact(spark, hash_sets):
     cand_df = spark.createDataFrame(
         [("s", int(h)) for h in cand_hashes], "site_id string, url_hash long"
     )
-    filters = bloom.build_filters(
-        seen_df, n_buckets=N_BUCKETS, expected_items=len(seen), fpr=FPR
+    filters = _build(
+        spark, seen_df, bloom, n_buckets=N_BUCKETS, expected_items=len(seen), fpr=FPR
     )
     exact = {
         r["url_hash"] for r in anti_join_seen(cand_df, seen_df, N_BUCKETS).collect()
     }
     fast = {
         r["url_hash"]
-        for r in bloom.bloom_anti_join_seen(cand_df, seen_df, filters, N_BUCKETS).collect()
+        for r in filtered_anti_join_seen(
+            cand_df, seen_df, filters, bloom, N_BUCKETS
+        ).collect()
     }
     assert fast == exact
     assert fast == set(int(h) for h in fresh[:half])
@@ -84,13 +97,43 @@ def test_bloom_incremental_update_matches_rebuild(spark, hash_sets):
     seen, fresh = hash_sets
     first = spark.createDataFrame([(int(h),) for h in seen[:10000]], "url_hash long")
     second = spark.createDataFrame([(int(h),) for h in seen[10000:]], "url_hash long")
-    f1 = bloom.build_filters(first, N_BUCKETS, expected_items=len(seen), fpr=FPR)
-    f2 = bloom.update_filters(f1, second, N_BUCKETS, expected_items=len(seen), fpr=FPR)
+    f1 = _build(spark, first, bloom, n_buckets=N_BUCKETS, expected_items=len(seen), fpr=FPR)
+    f2 = insert_filters(f1, second, bloom, N_BUCKETS, expected_items=len(seen), fpr=FPR)
     all_df = spark.createDataFrame([(int(h),) for h in seen], "url_hash long")
-    missed = bloom.bloom_flag(all_df, f2, N_BUCKETS).filter(~F.col("maybe_seen")).count()
+    missed = flag_maybe_seen(all_df, f2, bloom, N_BUCKETS).filter(~F.col("maybe_seen")).count()
     assert missed == 0
     counts = {r["bucket"]: r["n_items"] for r in f2.collect()}
     assert sum(counts.values()) == len(seen)
+
+
+def test_shared_insert_writes_scalar_bloom_blobs(spark, hash_sets):
+    """Pins the seen_filters Bloom format: per bucket, the blob written
+    by the shared insert — a wave-0 build followed by a wave's insert —
+    is byte-equal to one built key by key with ``bloom.scalar_insert``,
+    with the same n_items / m_bits / k."""
+    seen, _ = hash_sets
+    keys = [int(h) for h in seen[:600]]
+    expected_items = 400
+
+    def frame(hs):
+        return spark.createDataFrame([(h,) for h in hs], "url_hash long")
+
+    filters = insert_filters(
+        _build(spark, frame(keys[:400]), bloom, n_buckets=N_BUCKETS,
+               expected_items=expected_items, fpr=FPR),
+        frame(keys[400:]), bloom, N_BUCKETS, expected_items=expected_items, fpr=FPR,
+    )
+    got = {r["bucket"]: r for r in filters.collect()}
+
+    m, k = bloom.size_filter(expected_items // N_BUCKETS, FPR)
+    assert sorted(got) == sorted({h % N_BUCKETS for h in keys})
+    for b, row in got.items():
+        in_bucket = [h for h in keys if h % N_BUCKETS == b]
+        blob = bytearray(m // 8)
+        for h in in_bucket:
+            bloom.scalar_insert(blob, h, m, k)
+        assert (row["n_items"], row["m_bits"], row["k"]) == (len(in_bucket), m, k)
+        assert bytes(row["filter_blob"]) == bytes(blob), b
 
 
 def test_crawl_with_bloom_equals_exact_path(spark, corpus, tmp_path_factory):
@@ -160,8 +203,6 @@ def test_cuckoo_saturation_degrades_without_false_negatives(spark, hash_sets):
     """An over-capacity cuckoo bucket degrades to all-maybe-seen (every
     candidate pays the exact confirm) instead of killing the wave — the
     cuckoo analog of Bloom FPR drift. No false negatives either way."""
-    from crawler_spark.operators import cuckoo as C
-
     seen, fresh = hash_sets
     seen = seen[:5000]
     seen_df = spark.createDataFrame(
@@ -169,8 +210,8 @@ def test_cuckoo_saturation_degrades_without_false_negatives(spark, hash_sets):
     )
     # expected_items 256 across 8 buckets → ~64 slots/bucket vs ~625
     # actual keys/bucket: every bucket saturates
-    filters = C.build_cuckoo_filters(
-        seen_df, n_buckets=N_BUCKETS, expected_items=256
+    filters = _build(
+        spark, seen_df, cuckoo, n_buckets=N_BUCKETS, expected_items=256
     ).persist()
     n_items = [r["n_items"] for r in filters.select("n_items").collect()]
     assert all(n < 0 for n in n_items), n_items  # saturated sentinel
@@ -179,17 +220,19 @@ def test_cuckoo_saturation_degrades_without_false_negatives(spark, hash_sets):
         [("s", int(h)) for h in np.concatenate([seen[:500], fresh[:500]])],
         "site_id string, url_hash long",
     )
-    assert C.cuckoo_flag(cand, filters, N_BUCKETS).filter(
+    assert flag_maybe_seen(cand, filters, cuckoo, N_BUCKETS).filter(
         ~F.col("maybe_seen")
     ).count() == 0
     got = sorted(
         r["url_hash"]
-        for r in C.cuckoo_anti_join_seen(cand, seen_df, filters, N_BUCKETS).collect()
+        for r in filtered_anti_join_seen(
+            cand, seen_df, filters, cuckoo, N_BUCKETS
+        ).collect()
     )
     assert got == sorted(int(h) for h in fresh[:500])  # exact-path result
     # a saturated bucket stays saturated through an update
     more = spark.createDataFrame([(int(h),) for h in fresh[500:600]], "url_hash long")
-    upd = C.update_cuckoo_filters(filters, more, n_buckets=N_BUCKETS, expected_items=256)
+    upd = insert_filters(filters, more, cuckoo, n_buckets=N_BUCKETS, expected_items=256)
     assert all(r["n_items"] < 0 for r in upd.select("n_items").collect())
     filters.unpersist()
 
