@@ -20,4 +20,47 @@ Spark engine:
 Everything per-row is Arrow-batched; no per-row Python UDFs anywhere.
 """
 
+import sys
+
 __version__ = "0.1.0"
+
+
+def _guard_zip_directory_rereads() -> None:
+    """Skip re-reading an unchanged zip archive's directory.
+
+    PySpark's Python worker calls ``importlib.invalidate_caches()`` at the
+    start of every task. On Python < 3.12 that makes every cached
+    ``zipimporter`` re-read its whole archive directory, one read per
+    imported pyspark subpackage, all of the same ``pyspark.zip``: about
+    0.3 s of CPU per task on a 4-core host, paid even by a task over an
+    empty partition, and more than most of this engine's tasks spend on
+    data. An archive whose size and mtime are unchanged gets the
+    directory already read; a changed archive is re-read as before.
+    Workers run this when they unpickle the first engine UDF."""
+    import os
+    import zipimport
+
+    reread = zipimport.zipimporter.invalidate_caches
+    if getattr(reread, "_crawler_spark_guard", False):
+        return
+    stamps: dict[str, tuple[int, int]] = {}
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+        except OSError:
+            return reread(self)
+        stamp = (st.st_mtime_ns, st.st_size)
+        files = zipimport._zip_directory_cache.get(self.archive)
+        if files is not None and stamps.get(self.archive) == stamp:
+            self._files = files
+            return
+        reread(self)
+        stamps[self.archive] = stamp
+
+    invalidate_caches._crawler_spark_guard = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
+if sys.version_info < (3, 12):
+    _guard_zip_directory_rereads()

@@ -106,6 +106,19 @@ def frontier_hot() -> Column:
 # engines sharing one SparkSession (see run_wave docstring).
 _WAVE_CONF_LOCK = threading.Lock()
 
+# Batch rows per task of the wave's Python stages (extract and everything
+# downstream of its checkpoint): about the point where a task's UDF work
+# matches the fixed cost of one Python worker round trip (~0.3 s on a
+# 4-core host, paid even by an empty partition).
+_ROWS_PER_PY_TASK = 32
+
+# Rows per file of a wave's frontier delta. Each file written costs a
+# fixed amount on the local filesystem (without Hadoop's native library
+# every file create forks a ``chmod``; ~40-75 ms per file measured on a
+# 4-core host), so a delta of a few hundred rows goes to one file, not
+# one per bucket.
+_ROWS_PER_FILE = 100_000
+
 
 def _stats_next(stats: DataFrame, frontier_delta: DataFrame) -> DataFrame:
     """site_stats after a wave, from the wave's frontier delta alone
@@ -1071,12 +1084,18 @@ class CrawlEngine:
             )
 
         # --- extract -------------------------------------------------------
-        # The join output inherits the n_buckets co-partitioning, which
-        # also gives the extract UDF its parallelism (never leave this to
-        # AQE: it coalesces shuffles by *byte* size and would starve the
-        # CPU-heavy UDF of partitions).
+        # The extract UDF's parallelism is sized by the batch's ROW count,
+        # not left to AQE (which coalesces shuffles by *byte* size and
+        # would starve the CPU-heavy UDF of partitions) nor to n_buckets:
+        # every Python task pays a fixed worker round trip even on an
+        # empty partition, so a 20-row batch over 32 buckets would spend
+        # ~32 round trips per Python stage here and again in every
+        # downstream consumer of the checkpoint (link admission, cascade,
+        # curation). coalesce is narrow: the co-partitioned fetch join
+        # still runs on n_buckets shuffle partitions, fewer tasks read them.
+        py_parts = max(1, min(cfg.n_buckets, -(-n_batch // _ROWS_PER_PY_TASK)))
         seed_dim = self._seed_dim()
-        fetched = fetched.join(seed_dim, "site_id", "left")
+        fetched = fetched.coalesce(py_parts).join(seed_dim, "site_id", "left")
         ex_udf = {
             "density": extract_density_udf,
             "hybrid": extract_hybrid_udf,
@@ -1120,7 +1139,9 @@ class CrawlEngine:
                 )
                 .when(F.col("content_hash") == F.col("_old_hash"), F.lit("unchanged"))
                 .otherwise(F.lit("fetched")),
-            ),
+            )
+            # the ledger join may shuffle: keep the checkpoint row-sized
+            .coalesce(py_parts),
         )
         changed = checked.filter(F.col("_state") == "fetched").drop(
             "_state", "_old_hash"
@@ -1234,7 +1255,8 @@ class CrawlEngine:
         # partitions of a few KB each) — written as-is that is hundreds of
         # write tasks and tiny files PER WAVE that every later frontier
         # read re-unions; coalesce (no shuffle) bounds the delta to
-        # n_buckets tasks/files while keeping the write parallel
+        # n_buckets tasks, and the stage write below sizes its file count
+        # by the delta's row count
         frontier_delta = ckpt.take(
             outcome.unionByName(new_rows).coalesce(cfg.n_buckets)
         )
@@ -1274,7 +1296,8 @@ class CrawlEngine:
         cascade_out = None
         if cfg.cascade:
             cascade_out = run_cascade(
-                crawled_delta, self.seeds_df, w, cfg.relevance_threshold
+                crawled_delta, self.seeds_df, w, cfg.relevance_threshold,
+                pin=ckpt.take,
             )
             kb_next = merge_kb(kb, wave_kb_delta(cascade_out["verdicts"]))
             # ledger is a MOR log: append this wave's versions, resolution
@@ -1312,9 +1335,13 @@ class CrawlEngine:
         # hash-laid-out by the catalog (bucket(url_hash) — the layout the
         # seen anti-join co-partitions on); frontier/seen/ledger stage
         # only this wave's deltas.
+        delta_files = max(
+            1, min(cfg.n_buckets, -(-sum(state_counts.values()) // _ROWS_PER_FILE))
+        )
         stage_jobs: list[tuple[str, DataFrame, list[int] | None]] = [
-            ("frontier", frontier_delta, None),
-            ("site_stats", stats_next, None),
+            ("frontier", frontier_delta.coalesce(delta_files), None),
+            # one row per seed site
+            ("site_stats", stats_next.coalesce(1), None),
             ("crawled", crawled_delta, None),
         ]
         if att_failures is not None:
@@ -1358,9 +1385,8 @@ class CrawlEngine:
             allm = mframes[0]
             for m in mframes[1:]:
                 allm = allm.unionByName(m)
-            # same union-stacking as frontier_delta: bound the tiny
-            # metrics delta to one write task per bucket
-            stage_jobs.append(("metrics", allm.coalesce(cfg.n_buckets), None))
+            # a few rows per stage and partition: one file
+            stage_jobs.append(("metrics", allm.coalesce(1), None))
 
         # one worker per staged table: the writes are tiny independent
         # jobs over cached inputs — with fewer workers than tables the

@@ -5,6 +5,7 @@ scans must not read all-time crawled history)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from crawler_spark.wave import CrawlConfig, CrawlEngine, resolve_frontier
@@ -39,12 +40,25 @@ def _seen_sig(engine):
     )
 
 
-def test_compacted_crawl_equals_uncompacted(spark, corpus, tmp_path_factory):
-    d = corpus["dir"]
-    plain = _mk(spark, d, tmp_path_factory.mktemp("cmp_plain"), compact_every=0)
-    comp = _mk(spark, d, tmp_path_factory.mktemp("cmp_comp"), compact_every=2)
-    plain.run(max_waves=6)
-    comp.run(max_waves=6)
+@pytest.fixture(scope="module")
+def plain_run(spark, corpus, tmp_path_factory):
+    """The uncompacted 6-wave reference crawl; tests only read it."""
+    eng = _mk(spark, corpus["dir"], tmp_path_factory.mktemp("cmp_plain"), compact_every=0)
+    eng.run(max_waves=6)
+    return eng
+
+
+@pytest.fixture(scope="module")
+def compacted_run(spark, corpus, tmp_path_factory):
+    """The uninterrupted 6-wave crawl compacted every 2 waves; tests only
+    read it."""
+    eng = _mk(spark, corpus["dir"], tmp_path_factory.mktemp("cmp_comp"), compact_every=2)
+    eng.run(max_waves=6)
+    return eng
+
+
+def test_compacted_crawl_equals_uncompacted(plain_run, compacted_run):
+    plain, comp = plain_run, compacted_run
 
     # identical crawl semantics: full frontier history, seen set, crawled
     assert _full_sig(comp) == _full_sig(plain)
@@ -105,7 +119,7 @@ def test_compact_split_rerun_is_noop(spark, corpus, tmp_path_factory):
     )
 
 
-def test_resume_across_compaction(spark, corpus, tmp_path_factory):
+def test_resume_across_compaction(spark, corpus, tmp_path_factory, compacted_run):
     """Kill-and-resume with compaction enabled must equal the
     uninterrupted compacted run (checkpoint atomicity covers the
     split-compaction's two-dir publish)."""
@@ -120,20 +134,19 @@ def test_resume_across_compaction(spark, corpus, tmp_path_factory):
     assert e2.cat.committed_wave == 3
     e2.run(max_waves=3)
 
-    ref = _mk(spark, d, tmp_path_factory.mktemp("cmp_resume_ref"), compact_every=2)
-    ref.run(max_waves=6)
+    ref = compacted_run
     assert _full_sig(e2) == _full_sig(ref)
     assert _seen_sig(e2) == _seen_sig(ref)
 
 
-def test_ratio_triggered_compaction(spark, corpus, tmp_path_factory):
+def test_ratio_triggered_compaction(spark, corpus, tmp_path_factory, plain_run):
     """compact_terminal_ratio: with no fixed cadence, compaction must
     fire on its own once the consumed rows accumulated since the last
     compaction exceed ratio x live-pending — same crawl semantics as the
     uncompacted run, terminal history actually leaves the hot log, and
     the meta counter rides the atomic commit (resume-safe)."""
     d = corpus["dir"]
-    plain = _mk(spark, d, tmp_path_factory.mktemp("rt_plain"), compact_every=0)
+    plain = plain_run
     eng = CrawlEngine(
         spark,
         str(tmp_path_factory.mktemp("rt_ratio")),
@@ -144,7 +157,6 @@ def test_ratio_triggered_compaction(spark, corpus, tmp_path_factory):
             compact_every=0, compact_terminal_ratio=0.25,
         ),
     )
-    plain.run(max_waves=6)
     eng.run(max_waves=6)
 
     # identical crawl semantics
