@@ -34,9 +34,12 @@ def _guard_zip_directory_rereads() -> None:
     imported pyspark subpackage, all of the same ``pyspark.zip``: about
     0.3 s of CPU per task on a 4-core host, paid even by a task over an
     empty partition, and more than most of this engine's tasks spend on
-    data. An archive whose size and mtime are unchanged gets the
-    directory already read; a changed archive is re-read as before.
-    Workers run this when they unpickle the first engine UDF."""
+    data. An archive whose size and mtime are unchanged keeps the
+    directory already read; a changed archive is re-read as before (an
+    archive rewritten in place with the same size and mtime, to the
+    nanosecond, would keep its stale directory). Relies on the private
+    ``zipimport._zip_directory_cache`` and ``zipimporter._files``;
+    ``tests/test_zip_guard.py`` pins both."""
     import os
     import zipimport
 
@@ -62,5 +65,9 @@ def _guard_zip_directory_rereads() -> None:
     zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 
-if sys.version_info < (3, 12):
+# Only inside a PySpark Python worker (the process that has loaded
+# pyspark.worker_util, whose per-task setup makes the call), where the
+# first engine UDF unpickled imports this package; the driver and any
+# application embedding the package keep the stdlib behaviour.
+if sys.version_info < (3, 12) and "pyspark.worker_util" in sys.modules:
     _guard_zip_directory_rereads()

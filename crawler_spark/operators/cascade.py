@@ -6,16 +6,14 @@ low-quality (→ KB 0.0) → gate 2 gatekeeper relevance (→ KB 0.0) →
 gate 3 deep analysis → KB score feedback → threshold (0.6) → accept
 (packet + ledger update) / reject.
 
-Cascade cost order is preserved *by construction*: each stage masks the
-text of rows the previous stage rejected before the next (more
-expensive) UDF runs, so at scale the expensive analysis UDF only does
-work for gatekeeper survivors — the same 75%-cost-saving shape the
-reference claims for its two-stage LLM cascade (SURVEY §4).
+Cascade cost order is preserved *by construction*: each stage filters on
+the previous stage's verdict before the next (more expensive) UDF runs,
+so at scale the expensive analysis UDF only sees gatekeeper survivors —
+the same 75%-cost-saving shape the reference claims for its two-stage
+LLM cascade (SURVEY §4).
 """
 
 from __future__ import annotations
-
-from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -36,7 +34,6 @@ def run_cascade(
     seeds: DataFrame,
     wave: int | None,
     threshold: float = RELEVANCE_THRESHOLD,
-    pin: Callable[[DataFrame], DataFrame] | None = None,
 ) -> dict[str, DataFrame]:
     """Apply the full gate cascade to a crawled delta.
 
@@ -44,10 +41,6 @@ def run_cascade(
     own ``wave`` column (the streaming worker's micro-batches can span
     waves — a hardcoded wave would collide packet_ids when a page is
     re-crawled with changed content in a later wave).
-
-    ``pin``: optional materializer (e.g. the wave loop's checkpoint) for
-    the scored frame all four outputs are cut from, so the gate UDFs run
-    once however many of the outputs are written.
 
     Returns dict with:
       packets   — accepted rows (PACKETS schema)
@@ -61,39 +54,25 @@ def run_cascade(
     )
     df = crawled.join(seed_dim, "site_id", "left")
 
-    # Each gate sees the text of only the rows the previous gates passed
-    # (the others get NULL, which every gate maps to its reject value),
-    # so the gates keep their cost order while all rows stay in ONE
-    # frame: each UDF runs once per row, not once per output branch.
     # gate 0: parse-failure sentinel → KB failure feedback
-    sentinel = F.col("_sentinel")
     df = df.withColumn("_sentinel", sentinel_col(F.col("text")))
+    rej_sentinel = df.filter("_sentinel")
+    s1 = df.filter(~F.col("_sentinel"))
+
     # gate 1: programmatic low-quality (list-like) → score 0.0
-    df = df.withColumn(
-        "_low_q", low_quality_udf(F.when(~sentinel, F.col("text")))
-    )
+    s1 = s1.withColumn("_low_q", low_quality_udf("text"))
+    rej_lowq = s1.filter("_low_q")
+    s2 = s1.filter(~F.col("_low_q"))
+
     # gate 2: gatekeeper relevance on the 1500-char snippet → score 0.0
-    passed_1 = ~sentinel & ~F.col("_low_q")
-    df = df.withColumn(
-        "_relevant", gatekeeper_udf(F.when(passed_1, F.col("text")), "instruction")
-    )
+    s2 = s2.withColumn("_relevant", gatekeeper_udf("text", "instruction"))
+    rej_gate = s2.filter(~F.col("_relevant"))
+    s3 = s2.filter("_relevant")
+
     # gate 3: deep analysis → score feedback + threshold
-    relevant = F.col("_relevant")
-    df = df.withColumn(
-        "_a",
-        F.when(relevant, analyze_udf(F.when(relevant, F.col("text")), "instruction")),
-    )
-    score = F.col("_a.relevance_score")
-    scored = df.withColumn(
-        "_reason",
-        F.when(sentinel, F.lit("parse_failure"))
-        .when(F.col("_low_q"), F.lit("low_quality"))
-        .when(~relevant, F.lit("gatekeeper"))
-        .when(score < F.lit(threshold), F.lit("low_score")),
-    )
-    if pin is not None:
-        scored = pin(scored)
-    accepted = scored.filter(F.col("_reason").isNull())
+    s3 = s3.withColumn("_a", analyze_udf("text", "instruction"))
+    accepted = s3.filter(F.col("_a.relevance_score") >= F.lit(threshold))
+    rej_score = s3.filter(F.col("_a.relevance_score") < F.lit(threshold))
 
     packets = accepted.select(
         F.sha2(
@@ -106,25 +85,59 @@ def run_cascade(
         F.col("canonical_url").alias("content_url"),
         "title",
         truncate_packet_text(F.col("text")).alias("extracted_text"),
-        score.alias("relevance_score"),
+        F.col("_a.relevance_score").alias("relevance_score"),
         F.col("_a.language").alias("language"),
         F.col("_a.summary").alias("summary"),
         F.col("_a.keywords").alias("keywords"),
         wave_col.alias("wave"),
     )
 
-    rejected = scored.filter(F.col("_reason").isNotNull()).select(
-        "site_id", "canonical_url", "url_hash", F.col("_reason").alias("reason")
+    rejected = (
+        rej_sentinel.select(
+            "site_id", "canonical_url", "url_hash", F.lit("parse_failure").alias("reason")
+        )
+        .unionByName(
+            rej_lowq.select(
+                "site_id", "canonical_url", "url_hash", F.lit("low_quality").alias("reason")
+            )
+        )
+        .unionByName(
+            rej_gate.select(
+                "site_id", "canonical_url", "url_hash", F.lit("gatekeeper").alias("reason")
+            )
+        )
+        .unionByName(
+            rej_score.select(
+                "site_id", "canonical_url", "url_hash", F.lit("low_score").alias("reason")
+            )
+        )
     )
 
-    verdicts = scored.select(
-        "site_id",
-        "canonical_url",
-        F.when(sentinel, F.lit(None).cast("double"))
-        .when(relevant, score)
-        .otherwise(F.lit(0.0))
-        .alias("score"),
-        sentinel.alias("is_failure"),
+    verdicts = (
+        rej_sentinel.select(
+            "site_id",
+            "canonical_url",
+            F.lit(None).cast("double").alias("score"),
+            F.lit(True).alias("is_failure"),
+        )
+        .unionByName(
+            rej_lowq.select(
+                "site_id", "canonical_url", F.lit(0.0).alias("score"), F.lit(False).alias("is_failure")
+            )
+        )
+        .unionByName(
+            rej_gate.select(
+                "site_id", "canonical_url", F.lit(0.0).alias("score"), F.lit(False).alias("is_failure")
+            )
+        )
+        .unionByName(
+            s3.select(
+                "site_id",
+                "canonical_url",
+                F.col("_a.relevance_score").alias("score"),
+                F.lit(False).alias("is_failure"),
+            )
+        )
     )
 
     ledger_delta = accepted.select(

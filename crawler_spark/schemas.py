@@ -98,8 +98,8 @@ SITE_STATS = StructType(
     ]
 )
 
-# Partitioned Bloom-filter blobs (one row per hash bucket). Single source
-# of truth — operators/bloom.py re-exports this as FILTERS_SCHEMA.
+# Per-bucket seen-filter blobs (one row per hash bucket), shared by the
+# Bloom and cuckoo kernels through the operators in operators/seen.py.
 SEEN_FILTERS = StructType(
     [
         StructField("bucket", IntegerType()),

@@ -106,12 +106,6 @@ def frontier_hot() -> Column:
 # engines sharing one SparkSession (see run_wave docstring).
 _WAVE_CONF_LOCK = threading.Lock()
 
-# Batch rows per task of the wave's Python stages (extract and everything
-# downstream of its checkpoint): about the point where a task's UDF work
-# matches the fixed cost of one Python worker round trip (~0.3 s on a
-# 4-core host, paid even by an empty partition).
-_ROWS_PER_PY_TASK = 32
-
 # Rows per file of a wave's frontier delta. Each file written costs a
 # fixed amount on the local filesystem (without Hadoop's native library
 # every file create forks a ``chmod``; ~40-75 ms per file measured on a
@@ -1084,18 +1078,12 @@ class CrawlEngine:
             )
 
         # --- extract -------------------------------------------------------
-        # The extract UDF's parallelism is sized by the batch's ROW count,
-        # not left to AQE (which coalesces shuffles by *byte* size and
-        # would starve the CPU-heavy UDF of partitions) nor to n_buckets:
-        # every Python task pays a fixed worker round trip even on an
-        # empty partition, so a 20-row batch over 32 buckets would spend
-        # ~32 round trips per Python stage here and again in every
-        # downstream consumer of the checkpoint (link admission, cascade,
-        # curation). coalesce is narrow: the co-partitioned fetch join
-        # still runs on n_buckets shuffle partitions, fewer tasks read them.
-        py_parts = max(1, min(cfg.n_buckets, -(-n_batch // _ROWS_PER_PY_TASK)))
+        # The join output inherits the n_buckets co-partitioning, which
+        # also gives the extract UDF its parallelism (never leave this to
+        # AQE: it coalesces shuffles by *byte* size and would starve the
+        # CPU-heavy UDF of partitions).
         seed_dim = self._seed_dim()
-        fetched = fetched.coalesce(py_parts).join(seed_dim, "site_id", "left")
+        fetched = fetched.join(seed_dim, "site_id", "left")
         ex_udf = {
             "density": extract_density_udf,
             "hybrid": extract_hybrid_udf,
@@ -1139,9 +1127,7 @@ class CrawlEngine:
                 )
                 .when(F.col("content_hash") == F.col("_old_hash"), F.lit("unchanged"))
                 .otherwise(F.lit("fetched")),
-            )
-            # the ledger join may shuffle: keep the checkpoint row-sized
-            .coalesce(py_parts),
+            ),
         )
         changed = checked.filter(F.col("_state") == "fetched").drop(
             "_state", "_old_hash"
@@ -1296,8 +1282,7 @@ class CrawlEngine:
         cascade_out = None
         if cfg.cascade:
             cascade_out = run_cascade(
-                crawled_delta, self.seeds_df, w, cfg.relevance_threshold,
-                pin=ckpt.take,
+                crawled_delta, self.seeds_df, w, cfg.relevance_threshold
             )
             kb_next = merge_kb(kb, wave_kb_delta(cascade_out["verdicts"]))
             # ledger is a MOR log: append this wave's versions, resolution
