@@ -410,11 +410,12 @@ def q_embedding_neardup_lsh(spark, sf_dir):
     above the threshold are strictly safer. Exact cosine is recomputed
     on candidates, so any recalled pair carries the oracle's value.
     Recall 1.0 verified on this corpus (test_similarity_textstats.py);
-    throughput/scaling in BENCH/EMB_SCALE.md (bench.py --emb-scale).
+    throughput/scaling in BENCH/EMB_SCALE.md (a retired bench study;
+    BENCH/BASELINE.md's evidence index says how to re-run it).
     Scale note: at this LOW threshold the banding prunes little (the
     operator docstring derives why — near-orthogonal 'duplicates' are
     not LSH-friendly); production near-dup thresholds (≥0.9) are the
-    pruning regime the bench measures."""
+    pruning regime that study measured."""
     from crawler_spark.operators.similarity import embedding_neardup_pairs
 
     e = (

@@ -1,6 +1,7 @@
-"""URL canonicalization + link absolutization.
+"""URL canonicalization + the PDF-viewer link rewrite.
 
-Reference semantics being re-expressed (behavior only, no code reuse):
+Reference semantics being re-expressed (behavior only, no code reuse;
+links are absolutized at extraction, ``functions/html_extract.py``):
 
 * links are absolutized with ``urljoin(current_url, href)`` and hrefs
   starting ``#`` / ``javascript:`` are dropped
@@ -21,11 +22,8 @@ from __future__ import annotations
 from urllib.parse import parse_qs, unquote, urljoin, urlsplit, urlunsplit
 
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
-
-from crawler_spark.hashing import xxhash64_str
 
 
 def canonicalize(url: str) -> str:
@@ -44,13 +42,6 @@ def canonicalize(url: str) -> str:
         netloc = f"{netloc}:{port}"
     path = parts.path or "/"
     return urlunsplit((scheme, netloc, path, parts.query, ""))
-
-
-def absolutize(parent: str, href: str) -> str | None:
-    """Reference join semantics: skip fragment/js hrefs, urljoin the rest."""
-    if not href or href.startswith("#") or href.startswith("javascript:"):
-        return None
-    return urljoin(parent, href)
 
 
 def viewer_file_url(url: str, base_url: str) -> str | None:
@@ -114,18 +105,6 @@ def with_viewer_rewrite(df, url_col: str = "url", base_col: str = "base_url"):
     return plain.unionByName(viewer)
 
 
-def url_host(url: str) -> str:
-    try:
-        return (urlsplit(url).hostname or "").lower()
-    except ValueError:
-        return ""
-
-
-def url_seen_key(url: str) -> int:
-    """Driver/oracle-side seen-set key: xxhash64(canonical url), signed."""
-    return xxhash64_str(canonicalize(url))
-
-
 # --- Spark-side columns -------------------------------------------------
 
 @F.pandas_udf(StringType())
@@ -133,29 +112,11 @@ def canonicalize_udf(urls: pd.Series) -> pd.Series:
     return urls.map(lambda u: canonicalize(u) if u is not None else None)
 
 
-@F.pandas_udf(StringType())
-def absolutize_udf(parents: pd.Series, hrefs: pd.Series) -> pd.Series:
-    return pd.Series(
-        [absolutize(p, h) if p is not None else None for p, h in zip(parents, hrefs)]
-    )
-
-
 # URLs matching this are already in canonical form (lowercase http(s)
 # scheme+host, no port/userinfo/fragment, non-empty path) — for them
 # canonicalize() is the identity, so the plan skips the Python UDF
 # entirely and stays in codegen. Anything unusual takes the slow path.
 _ALREADY_CANONICAL_RE = r"^https?://[a-z0-9][a-z0-9.-]*/[^#]*$"
-
-
-def canonical_col(url: Column) -> Column:
-    """canonical_url as a Column expression. NOTE: Spark extracts pandas
-    UDFs into an unconditional ArrowEvalPython stage, so the when-guard
-    selects *results* but does not skip the Python work — use
-    :func:`with_canonical_split` when the UDF cost matters (it splits the
-    rows so already-canonical URLs never leave the JVM)."""
-    return F.when(url.rlike(_ALREADY_CANONICAL_RE), url).otherwise(
-        canonicalize_udf(url)
-    )
 
 
 def with_canonical_split(df, url_col: str = "url"):
@@ -171,15 +132,3 @@ def with_canonical_split(df, url_col: str = "url"):
     simple = df.filter(guard).withColumn("canonical_url", url)
     odd = df.filter(~guard).withColumn("canonical_url", canonicalize_udf(url))
     return simple.unionByName(odd)
-
-
-def with_canonical(df, url_col: str = "url"):
-    """Add ``canonical_url``, ``url_hash`` (xxhash64, the seen key) and
-    ``host`` columns. ``host``/hash are pure JVM column expressions so the
-    scan → hash path stays inside whole-stage codegen; the canonical-form
-    rewrite is JVM for already-canonical URLs, pandas UDF otherwise."""
-    return (
-        df.withColumn("canonical_url", canonical_col(F.col(url_col)))
-        .withColumn("url_hash", F.xxhash64(F.col("canonical_url")))
-        .withColumn("host", F.lower(F.parse_url(F.col("canonical_url"), F.lit("HOST"))))
-    )

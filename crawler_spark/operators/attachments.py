@@ -343,18 +343,3 @@ def parse_attachments(df: DataFrame) -> DataFrame:
             yield pd.DataFrame({"url": pdf["url"], "text_block": texts, "ok": oks})
 
     return df.mapInPandas(gen, PARSED)
-
-
-def failed_attachment_sink(df: DataFrame, parsed: DataFrame) -> DataFrame:
-    """S7: rows whose parse failed, with raw payload preserved for the
-    failed-attachments table (reference saves bytes + meta json)."""
-    bad = parsed.filter(~parsed["ok"]).select("url")
-    return df.join(bad, "url", "left_semi").select(
-        "url", df["payload"]
-    ).withColumn("reason", _lit_parse_failed())
-
-
-def _lit_parse_failed():
-    from pyspark.sql import functions as F
-
-    return F.lit("parse_failed_or_unsupported")

@@ -392,7 +392,8 @@ def substring_dedup_spans(
     This is the distributed re-expression: a run of ``M ≥ min_tokens``
     tokens shared between two documents contains ``M − min_tokens + 1``
     shared ``min_tokens``-grams and is exactly recovered by marking
-    duplicated grams and merging their overlapping windows — same
+    duplicated grams and merging their overlapping or abutting windows
+    (two runs back to back cover one contiguous range) — same
     output contract as the suffix-array scan, no suffix array needed.
 
     ``scope='cross_doc'``: a gram is duplicated iff it occurs in ≥ 2
@@ -454,7 +455,7 @@ def substring_dedup_spans(
         F.col("ps"),
         F.expr("cast(array() as array<struct<s:int, e:int>>)"),
         lambda acc, p: F.when(
-            (F.size(acc) > 0) & (p <= last(acc)["e"]),
+            (F.size(acc) > 0) & (p <= last(acc)["e"] + 1),
             F.concat(
                 F.slice(acc, 1, F.size(acc) - 1),
                 F.array(

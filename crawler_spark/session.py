@@ -23,6 +23,18 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
 
 
+def default_driver_memory() -> str:
+    """``spark.driver.memory`` when ``SPARK_GRAFT_DRIVER_MEM`` is unset:
+    half of physical RAM, capped at 24g and floored at 1g, so a driver
+    started next to other JVMs on a small host is not sized past the
+    machine."""
+    try:
+        ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    except (AttributeError, ValueError, OSError):  # no sysconf (Windows)
+        return "24g"
+    return f"{max(1024, min(24 * 1024, ram_mb // 2))}m"
+
+
 def build_session(
     app_name: str = "crawler_spark",
     master: str | None = None,
@@ -43,7 +55,7 @@ def build_session(
         if not SparkConf().contains("spark.master"):
             master = "local[*]"
     shuffle = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory()
 
     builder = SparkSession.builder.appName(app_name)
     if master:

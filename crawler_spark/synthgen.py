@@ -120,8 +120,8 @@ def _host_sizes(n_pages: int, n_hosts: int, skew_exp: float = 1.1) -> list[int]:
 
     ``skew_exp`` is the Zipf exponent: 0.0 → uniform hosts, the 1.1
     default → the mild web-like skew every corpus so far has used, 3.0 →
-    a pathological mega-domain holding ~80%+ of all pages (the
-    ``bench.py --skew`` stress input)."""
+    a pathological mega-domain holding ~80%+ of all pages (a host-skew
+    stress input)."""
     weights = [1.0 / (i + 1) ** skew_exp for i in range(n_hosts)]
     total = sum(weights)
     sizes = [max(2, int(round(n_pages * w / total))) for w in weights]

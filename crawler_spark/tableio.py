@@ -148,15 +148,23 @@ class TableCatalog:
             return col.cast("int")
         return F.pmod(col, F.lit(spec.n_buckets)).cast("int")
 
-    def _write_bucketed(self, df: DataFrame, spec: _Spec, path: str) -> None:
-        # One shuffle on the bucket id so each bucket's rows land in one
-        # task → one file per touched bucket dir (the Iceberg
-        # bucket-transform layout). The partition column is a *copy*
-        # (``_b``) so the data files keep the original key columns.
-        out = df.withColumn("_b", self._bucket_expr(spec))
-        out.repartition(F.col("_b")).write.partitionBy("_b").mode(
-            "overwrite"
-        ).parquet(path)
+    def _write(self, df: DataFrame, spec: _Spec, rel: str) -> None:
+        """Write ``df`` as version dir ``rel`` (replacing a stale leftover
+        of a crashed wave or compaction). Bucketed modes shuffle once on
+        the bucket id so each bucket's rows land in one task → one file
+        per touched bucket dir (the Iceberg bucket-transform layout); the
+        partition column is a *copy* (``_b``) so the data files keep the
+        original key columns."""
+        path = os.path.join(self.root, rel)
+        if os.path.exists(path):
+            shutil.rmtree(path)
+        if spec.mode in (BUCKET_APPEND, BUCKET_REPLACE):
+            out = df.withColumn("_b", self._bucket_expr(spec))
+            out.repartition(F.col("_b")).write.partitionBy("_b").mode(
+                "overwrite"
+            ).parquet(path)
+        else:
+            df.write.mode("overwrite").parquet(path)
 
     def stage(
         self, name: str, df: DataFrame, wave: int, touched: list[int] | None = None
@@ -171,13 +179,7 @@ class TableCatalog:
             "u" if spec.mode == BUCKET_REPLACE else "v"
         )
         rel = f"{name}/{prefix}{wave}"
-        path = os.path.join(self.root, rel)
-        if os.path.exists(path):
-            shutil.rmtree(path)  # stale leftover from a crashed wave
-        if spec.mode in (BUCKET_APPEND, BUCKET_REPLACE):
-            self._write_bucketed(df, spec, path)
-        else:
-            df.write.mode("overwrite").parquet(path)
+        self._write(df, spec, rel)
         with self._lock:
             self._pending[name] = {"rel": rel, "touched": touched}
 
@@ -190,6 +192,12 @@ class TableCatalog:
                 if d.startswith("_b="):
                     out[int(d.split("=", 1)[1])] = f"{rel}/{d}"
         return out
+
+    def _leaf_manifest(self, rel: str) -> dict[str, str]:
+        """A BUCKET_APPEND delta's bucket→leaf map as the checkpoint
+        records it (one LIST at write time, zero LISTs on every later
+        read)."""
+        return {str(k): leaf for k, leaf in self._leaf_buckets(rel).items()}
 
     def _delta_leaf_map(self, name: str, drel: str) -> dict[int, str]:
         """bucket id → leaf rel-path for a BUCKET_APPEND delta, from the
@@ -217,12 +225,8 @@ class TableCatalog:
             elif mode in (APPEND, BUCKET_APPEND):
                 new_state["deltas"].setdefault(name, []).append(p["rel"])
                 if mode == BUCKET_APPEND:
-                    # record the delta's bucket→leaf map (one LIST here,
-                    # zero LISTs on every subsequent read)
-                    new_state["delta_buckets"].setdefault(name, {})[p["rel"]] = {
-                        str(k): leaf
-                        for k, leaf in self._leaf_buckets(p["rel"]).items()
-                    }
+                    manifest = new_state["delta_buckets"].setdefault(name, {})
+                    manifest[p["rel"]] = self._leaf_manifest(p["rel"])
             else:  # BUCKET_REPLACE: repoint only the touched bucket entries
                 found = self._leaf_buckets(p["rel"])
                 bmap = new_state["buckets"].setdefault(name, {})
@@ -396,19 +400,11 @@ class TableCatalog:
         if resolver is not None:
             df = resolver(df)
         rel = f"{name}/c{self._state['wave']}"
-        path = os.path.join(self.root, rel)
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        if spec.mode == BUCKET_APPEND:
-            self._write_bucketed(df, spec, path)
-        else:
-            df.write.mode("overwrite").parquet(path)
+        self._write(df, spec, rel)
         new_state = json.loads(json.dumps(self._state))
         new_state["deltas"][name] = [rel]
         if spec.mode == BUCKET_APPEND:
-            new_state["delta_buckets"][name] = {
-                rel: {str(k): leaf for k, leaf in self._leaf_buckets(rel).items()}
-            }
+            new_state["delta_buckets"][name] = {rel: self._leaf_manifest(rel)}
         self._write_checkpoint(new_state)
         self._vacuum_deltas(name)
 
@@ -464,27 +460,14 @@ class TableCatalog:
             # row must land in exactly one output.
             archive = resolved.filter(~hot_filter | hot_filter.isNull())
             arch_rel = f"{archive_name}/dc{wave}"
-            hot_path = os.path.join(self.root, hot_rel)
-            if os.path.exists(hot_path):
-                shutil.rmtree(hot_path)
-            if spec.mode == BUCKET_APPEND:
-                self._write_bucketed(hot, spec, hot_path)
-            else:
-                hot.write.mode("overwrite").parquet(hot_path)
-            arch_path = os.path.join(self.root, arch_rel)
-            if os.path.exists(arch_path):
-                shutil.rmtree(arch_path)
-            archive.write.mode("overwrite").parquet(arch_path)
+            self._write(hot, spec, hot_rel)
+            self._write(archive, aspec, arch_rel)
         finally:
             resolved.unpersist()
         new_state = json.loads(json.dumps(self._state))
         new_state["deltas"][name] = [hot_rel]
         if spec.mode == BUCKET_APPEND:
-            new_state["delta_buckets"][name] = {
-                hot_rel: {
-                    str(k): leaf for k, leaf in self._leaf_buckets(hot_rel).items()
-                }
-            }
+            new_state["delta_buckets"][name] = {hot_rel: self._leaf_manifest(hot_rel)}
         new_state["deltas"].setdefault(archive_name, []).append(arch_rel)
         self._write_checkpoint(new_state)
         self._vacuum_deltas(name)

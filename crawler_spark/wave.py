@@ -102,8 +102,19 @@ def frontier_hot() -> Column:
     return F.col("state") == "pending"
 
 
-# Serializes run_wave's session-scoped AQE save/toggle/restore across
-# engines sharing one SparkSession (see run_wave docstring).
+# Links expanded per crawled page, in document order (Q6, reference
+# fast_crawler_agent.py:242).
+LINK_CAP = 50
+
+# Waves run with AQE off. The wave's plans are fully hand-partitioned —
+# explicit n_buckets repartition on uniform xxhash64 keys, plan-asserted
+# broadcasts, salted host aggregates — so AQE has nothing left to fix,
+# while its per-shuffle-stage re-optimization serializes on the driver
+# (measured: ~25% of wave wall time at local[16], 91 → 68 jobs/wave when
+# disabled). Ad-hoc analytics on the same session keep whatever the
+# session sets. This lock serializes run_wave's session-scoped AQE
+# save/toggle/restore across engines sharing one SparkSession (see
+# run_wave docstring).
 _WAVE_CONF_LOCK = threading.Lock()
 
 # Rows per file of a wave's frontier delta. Each file written costs a
@@ -187,14 +198,12 @@ class _WaveCheckpoints:
 class CrawlConfig:
     mode: str = FIFO                  # fifo (reference parity) | priority
     batch_size: int | None = None     # None → reference min(20, max_pages//5)
-    link_cap: int = 50                # Q6 (fast_crawler_agent.py:242)
     wave_seconds: float = 20.0        # politeness budget window (priority mode)
     cascade: bool = False             # run the phase-2 filter cascade per wave
     curate: bool = False              # gopher-gate + PII-redact packets
     #                                   before they are committed (needs
     #                                   cascade; same stage the streaming
     #                                   worker runs under curate=True)
-    relevance_threshold: float = 0.6
     n_buckets: int = 32               # url_hash buckets for the seen anti-join
     metrics: bool = True
     # True = reference semantics (crawl stays on the seed's netloc);
@@ -276,16 +285,6 @@ class CrawlConfig:
     # of terminal history, and forces pointless rewrites on huge waves).
     # Counter rides the catalog meta, so it survives resume. 0 = off.
     compact_terminal_ratio: float = 0.0
-    # AQE inside the wave hot loop. The wave's plans are fully
-    # hand-partitioned — explicit n_buckets repartition on uniform
-    # xxhash64 keys, plan-asserted broadcasts, salted host aggregates —
-    # so AQE has nothing left to fix, while its per-shuffle-stage
-    # re-optimization serializes on the driver (measured: ~25% of wave
-    # wall time at local[16], 91 → 68 jobs/wave when disabled). Off by
-    # default for waves; ad-hoc analytics on the same session keep
-    # whatever the session sets. Re-enable if a corpus produces skewed
-    # *join* keys the salting/bucketing scheme doesn't already cover.
-    adaptive_in_wave: bool = False
 
 
 class CrawlEngine:
@@ -901,10 +900,10 @@ class CrawlEngine:
     def run_wave(self) -> dict:
         """Execute wave ``committed_wave + 1``; returns wave summary.
 
-        Runs with AQE per ``config.adaptive_in_wave`` (see CrawlConfig)
-        and restores the session's prior setting afterwards. The toggle
-        is necessarily session-scoped (Spark has no per-query SQL conf),
-        so concurrent waves serialize on a process-wide lock to keep the
+        Runs with AQE off (see ``_WAVE_CONF_LOCK``) and restores the
+        session's prior setting afterwards. The toggle is necessarily
+        session-scoped (Spark has no per-query SQL conf), so concurrent
+        waves serialize on a process-wide lock to keep the
         save/restore pairs from clobbering each other; a caller that
         runs OTHER work concurrently with a wave on the same
         SparkSession (e.g. the streaming worker, ad-hoc analytics)
@@ -913,10 +912,7 @@ class CrawlEngine:
         with _WAVE_CONF_LOCK:
             conf = self.spark.conf
             prev = conf.get("spark.sql.adaptive.enabled", "true")
-            conf.set(
-                "spark.sql.adaptive.enabled",
-                "true" if self.config.adaptive_in_wave else "false",
-            )
+            conf.set("spark.sql.adaptive.enabled", "false")
             ckpt = _WaveCheckpoints(self.spark)
             try:
                 return self._run_wave_impl(ckpt)
@@ -1167,7 +1163,7 @@ class CrawlEngine:
             F.col("seq").alias("parent_seq"),
             (F.col("depth") + 1).alias("depth"),
             F.col("ex.quality_score").alias("score"),
-            F.posexplode(F.slice(F.col("ex.links"), 1, cfg.link_cap)).alias(
+            F.posexplode(F.slice(F.col("ex.links"), 1, LINK_CAP)).alias(
                 "link_idx", "_link"
             ),
         ).select(
@@ -1281,9 +1277,7 @@ class CrawlEngine:
         kb_next = kb
         cascade_out = None
         if cfg.cascade:
-            cascade_out = run_cascade(
-                crawled_delta, self.seeds_df, w, cfg.relevance_threshold
-            )
+            cascade_out = run_cascade(crawled_delta, self.seeds_df, w)
             kb_next = merge_kb(kb, wave_kb_delta(cascade_out["verdicts"]))
             # ledger is a MOR log: append this wave's versions, resolution
             # (max wave per key) happens on the bucket-pruned read

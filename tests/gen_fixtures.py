@@ -406,7 +406,7 @@ def substring_spans_independent(
     dict counting of distinct docs per gram, plain-Python interval
     merge — an independent transcription of the span definition (a
     token is in a span iff some cross-doc-duplicated min_tokens-gram
-    window covers it; overlapping windows merge)."""
+    window covers it; overlapping or abutting windows merge)."""
     from collections import defaultdict
 
     k = min_tokens
@@ -424,7 +424,7 @@ def substring_spans_independent(
         for p in range(len(w) - k + 1):
             if len(gram_docs[tuple(w[p : p + k])]) < 2:
                 continue
-            if spans and p <= spans[-1][1]:
+            if spans and p <= spans[-1][1] + 1:
                 spans[-1][1] = max(spans[-1][1], p + k - 1)
             else:
                 spans.append([p, p + k - 1])

@@ -256,6 +256,27 @@ def test_substring_dedup_planted_spans(spark):
     assert got2 == [(10, 0, 4), (10, 9, 13), (11, 0, 4), (11, 10, 14)]
 
 
+def test_substring_dedup_abutting_runs_merge(spark):
+    """Two independent duplicated runs back to back in one doc (each
+    shared with a different doc, no gram straddling the seam shared)
+    cover one contiguous token range, so they are ONE maximal span."""
+    a = "one two three four five"
+    b = "six seven eight nine ten"
+    df = spark.createDataFrame(
+        [
+            (20, a + " " + b),
+            (21, a + " unrelated tail words here"),
+            (22, "different lead words here " + b),
+        ],
+        "doc_id long, text string",
+    )
+    got = sorted(
+        (r["doc_id"], r["span_start"], r["span_end"], r["span_tokens"])
+        for r in dedup.substring_dedup_spans(df, min_tokens=5).collect()
+    )
+    assert got == [(20, 0, 9, 10), (21, 0, 4, 5), (22, 4, 8, 5)]
+
+
 def test_substring_dedup_validation(spark):
     df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
     with pytest.raises(ValueError, match="scope"):
